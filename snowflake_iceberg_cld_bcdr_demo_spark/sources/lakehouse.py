@@ -19,11 +19,12 @@ provides the same *semantics* over parquet + JSON manifests, pure PySpark:
   ``_manifest.v{N}.json`` via an exclusive hard-link (atomic create), so
   two concurrent appenders serialize — the loser re-reads and retries
   with the winner's snapshot included (Iceberg's metadata-file CAS);
-- **schema evolution**: each snapshot records its own column list; reads
-  merge schemas across data dirs when they differ, so appending a frame
-  with a new column works and old snapshots read back their own schema
-  (the CLD "automatic sync on refresh" observation,
-  `scripts/11_catalog_linked_database.sql:163-170`);
+- **schema evolution**: each snapshot records its own column list and
+  each data dir its parquet file schema; reads merge the recorded
+  schemas when dirs differ (Spark never infers one, so planning a read
+  launches no job), so appending a frame with a new column works and old
+  snapshots read back their own schema (the CLD "automatic sync on
+  refresh" observation, `scripts/11_catalog_linked_database.sql:163-170`);
 - **reads** union the data dirs visible at a snapshot → time travel =
   ``load(..., snapshot_id=N)`` (Iceberg ``VERSION AS OF``);
 - **catalogs** are views over one shared warehouse: the namespace listing
@@ -54,6 +55,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 MANIFEST = "_manifest.json"
 #: manifest versions retained alongside the current one (history window for
@@ -67,6 +69,67 @@ STATS_MAX_STRING = 64
 
 #: column type prefixes that get min/max bounds in the manifest
 _STATS_NUMERIC = ("tinyint", "smallint", "int", "bigint", "float", "double", "decimal")
+
+#: manifest families keyed by data/delete dir name (``{dir: entry}``).
+#: Every path that carries, filters or remaps dirs goes through this one
+#: tuple, so a new per-dir field cannot be missed.  ``dir_schemas`` and
+#: ``delete_dir_schemas`` hold each dir's parquet FILE schema
+#: (``StructType.json()``): reads pass it to Spark instead of inferring
+#: it, which would cost one Spark job per dir (Iceberg readers likewise
+#: take the schema from table metadata).
+DIR_FAMILIES = (
+    "dir_columns",
+    "dir_schemas",
+    "dir_stats",
+    "dir_rows",
+    "dir_blooms",
+    "file_stats",
+    "delete_dir_cols",
+    "delete_dir_schemas",
+    "delete_dir_scope",
+)
+
+
+def _nullable(dt: DataType) -> DataType:
+    """``dt`` with every field, element and value nullable — the shape
+    Spark gives any parquet schema it reads back."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def _file_schema(schema: StructType, partition_cols: list[str] = ()) -> str:
+    """Manifest entry for a dir written from a frame with ``schema``: the
+    nullable schema minus the hive partition columns, which live in the
+    path.  Partition columns must stay out of it: given a schema, Spark
+    would type them from it instead of discovering them from the path."""
+    return _nullable(
+        StructType([f for f in schema.fields if f.name not in partition_cols])
+    ).json()
+
+
+def _schema_of(entry: str) -> StructType:
+    """The StructType a ``dir_schemas``/``delete_dir_schemas`` entry holds."""
+    return StructType.fromJson(json.loads(entry))
+
+
+def _merged_schema(schemas: list[StructType]) -> StructType | None:
+    """Union of per-dir file schemas by name, first-seen order (the read
+    side of append-with-new-column evolution); None when two dirs give
+    one column different types — those dirs are read one by one and
+    ``unionByName`` widens the types."""
+    fields: dict[str, StructField] = {}
+    for s in schemas:
+        for f in s.fields:
+            if fields.setdefault(f.name, f).dataType != f.dataType:
+                return None
+    return StructType(list(fields.values()))
 
 
 def _truncated_bounds(lo: str, hi: str, limit: int = STATS_MAX_STRING):
@@ -277,6 +340,10 @@ class LakehouseCatalog:
         # parquet column statistics (INT96 has none), which file-level
         # skipping and footer-derived metrics depend on.
         spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+        # Reads name their dirs from the manifest.  Past 32 paths (or
+        # partition subdirs) Spark would list them in a Spark job; on the
+        # driver the listing is cheaper than the job's fixed cost.
+        spark.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
         # opt-in engine-enforced RBAC: (GrantRegistry, active role) or
         # None = unenforced (the default — backward compatible)
         self._rbac: tuple | None = None
@@ -785,27 +852,10 @@ class LakehouseCatalog:
                 {**s, "expired": True} if s["snapshot_id"] in expired_ids or s.get("expired") else s
                 for s in snaps
             ]
-            candidate["dir_columns"] = {
-                d: c for d, c in manifest.get("dir_columns", {}).items() if d in live
-            }
-            candidate["dir_stats"] = {
-                d: s for d, s in manifest.get("dir_stats", {}).items() if d in live
-            }
-            candidate["dir_rows"] = {
-                d: r for d, r in manifest.get("dir_rows", {}).items() if d in live
-            }
-            candidate["file_stats"] = {
-                d: s for d, s in manifest.get("file_stats", {}).items() if d in live
-            }
-            candidate["dir_blooms"] = {
-                d: b for d, b in manifest.get("dir_blooms", {}).items() if d in live
-            }
-            candidate["delete_dir_cols"] = {
-                d: c for d, c in manifest.get("delete_dir_cols", {}).items() if d in live
-            }
-            candidate["delete_dir_scope"] = {
-                d: s for d, s in manifest.get("delete_dir_scope", {}).items() if d in live
-            }
+            for fam in DIR_FAMILIES:
+                candidate[fam] = {
+                    d: v for d, v in manifest.get(fam, {}).items() if d in live
+                }
             try:
                 self._publish_manifest(namespace, table, candidate, version=base_version + 1)
             except FileExistsError:
@@ -1010,9 +1060,11 @@ class LakehouseCatalog:
         self, namespace: str, table: str, manifest: dict, df: DataFrame
     ) -> tuple[str, int, dict]:
         """Write ``df`` into a freshly claimed data dir with the table's
-        (hidden) partition layout; returns (dir name, row count, column
-        bounds).  The row count and stats ride the write job itself via
-        ``df.observe`` — no second scan."""
+        (hidden) partition layout; returns (dir name, row count, the dir's
+        :data:`DIR_FAMILIES` entries).  The row count and stats ride the
+        write job itself via ``df.observe`` — no second scan; the file
+        schema is ``df.schema``, known without a job.  A zero-row write
+        leaves a dir with no parquet file: see :meth:`_keep_empty`."""
         sid_guess = len(manifest["snapshots"]) + 1
         data_dir = self._claim_data_dir(namespace, table, sid_guess)
         out = os.path.join(self._table_path(namespace, table), data_dir)
@@ -1050,10 +1102,47 @@ class LakehouseCatalog:
         writer.parquet(out)
         metrics = obs.get
         added = int(metrics["rows"])
-        dir_stats = (
-            self._stats_from_metrics(metrics, stat_kinds, dict(df.dtypes)) if added else {}
-        )
-        return data_dir, added, dir_stats
+        return data_dir, added, {
+            "dir_columns": list(df.columns),
+            "dir_schemas": _file_schema(df.schema, pcols),
+            "dir_stats": (
+                self._stats_from_metrics(metrics, stat_kinds, dtypes) if added else {}
+            ),
+            "dir_rows": added,
+        }
+
+    def _keep_empty(
+        self, namespace: str, table: str, data_dir: str, entries: dict, schema
+    ) -> None:
+        """Make a zero-row data dir readable.  A zero-row partitioned
+        write materializes no partition dirs (and hence no schema-bearing
+        parquet file); an empty create/replace keeps one explicit empty,
+        unpartitioned file so the table schema survives."""
+        out = os.path.join(self._table_path(namespace, table), data_dir)
+        self.spark.createDataFrame([], schema).repartition(1).write.mode(
+            "overwrite"
+        ).parquet(out)
+        entries["dir_schemas"] = _file_schema(schema)
+
+    def _write_delete_dir(
+        self, namespace: str, table: str, sid: int, keys: DataFrame
+    ) -> tuple[str, str, int, str]:
+        """Write a merge-on-read equality-delete key set into a fresh
+        delete dir; returns (dir name, path, key count, file schema)."""
+        ddir = f"deletes-{sid:05d}-{uuid.uuid4().hex[:8]}"
+        out = os.path.join(self._table_path(namespace, table), ddir)
+        obs = Observation()
+        keys.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+            "overwrite"
+        ).parquet(out)
+        return ddir, out, int(obs.get["rows"]), _file_schema(keys.schema)
+
+    @staticmethod
+    def _add_dir_entries(candidate: dict, d: str, entries: dict) -> None:
+        """Record dir ``d``'s family entries in a candidate manifest (each
+        family dict is copied: the candidate shares them with its base)."""
+        for fam, v in entries.items():
+            candidate[fam] = {**candidate.get(fam, {}), d: v}
 
     def _collect_file_stats(self, out_path: str, cols: list[str]) -> dict:
         """Per-file min/max bounds for ``cols`` from the just-written
@@ -1111,9 +1200,12 @@ class LakehouseCatalog:
                 stats[os.path.relpath(fp, out_path)] = entry
         return stats
 
-    def _build_dir_blooms(self, out_path: str, bcfg: dict, dtypes: dict) -> dict:
+    def _build_dir_blooms(
+        self, out_path: str, bcfg: dict, dtypes: dict, file_schema: str
+    ) -> dict:
         """Build one Bloom filter per configured column over the rows of a
-        just-written data dir: a column-pruned scan of only the indexed
+        just-written data dir: a column-pruned scan (given the dir's
+        recorded ``file_schema``, so no inference job) of only the indexed
         columns computes the k distinct bit positions per value
         (md5-based double hashing, :func:`_bloom_probe_positions`), and
         the driver packs them into an m-bit bitset (m/8 bytes per column
@@ -1130,7 +1222,7 @@ class LakehouseCatalog:
         ]
         if not cols:
             return {}
-        written = self.spark.read.parquet(out_path)
+        written = self.spark.read.schema(_schema_of(file_schema)).parquet(out_path)
         cols = [c for c in cols if c in written.columns]
         aggs = []
         for c in cols:
@@ -1191,34 +1283,30 @@ class LakehouseCatalog:
         # 1. write the data exactly once, outside the retry loop; the row
         # count rides along on the write job itself (no second scan —
         # `df.observe` attaches a metric to the existing action)
-        data_dir, added, dir_stats = self._write_data_dir(namespace, table, manifest, df)
+        data_dir, added, entries = self._write_data_dir(namespace, table, manifest, df)
         out = os.path.join(self._table_path(namespace, table), data_dir)
-        file_stats = (
-            self._collect_file_stats(out, file_stats_cols)
-            if file_stats_cols and added
-            else None
-        )
-        dir_blooms = (
-            self._build_dir_blooms(out, manifest["bloom"], dict(df.dtypes))
-            if manifest.get("bloom") and added
-            else None
-        )
         if added == 0:
-            # A zero-row partitioned write materializes no partition dirs
-            # (and hence no schema-bearing parquet file), which would make
-            # the dir unreadable.  Iceberg semantics: an empty append adds
-            # no data files (the snapshot still commits — cursors advance,
-            # batch ids are recorded); an empty create/replace keeps one
-            # explicit empty file so the table schema survives.
-            import shutil
-
-            shutil.rmtree(out, ignore_errors=True)
+            # Iceberg semantics: an empty append adds no data files (the
+            # snapshot still commits — cursors advance, batch ids are
+            # recorded)
             if op == "append" or (op == "rewrite" and carry_dirs):
+                import shutil
+
+                shutil.rmtree(out, ignore_errors=True)
                 data_dir = None
             else:
-                self.spark.createDataFrame([], df.schema).repartition(1).write.mode(
-                    "overwrite"
-                ).parquet(out)
+                self._keep_empty(namespace, table, data_dir, entries, df.schema)
+        else:
+            extra = {
+                "file_stats": file_stats_cols
+                and self._collect_file_stats(out, file_stats_cols),
+                "dir_blooms": manifest.get("bloom")
+                and self._build_dir_blooms(
+                    out, manifest["bloom"], dict(df.dtypes), entries["dir_schemas"]
+                ),
+            }
+            # an empty file-stats entry would read as "every file pruned"
+            entries.update({fam: v for fam, v in extra.items() if v})
 
         # 2. commit the manifest with optimistic-concurrency retry: the
         # exclusive version-file create is the CAS; losers re-read the
@@ -1324,33 +1412,10 @@ class LakehouseCatalog:
                     branch: {"type": "branch", "snapshot_id": sid},
                 }
             candidate["columns"] = evolved
+            if extra_dir_rows:
+                candidate["dir_rows"] = {**manifest.get("dir_rows", {}), **extra_dir_rows}
             if data_dir is not None:
-                candidate["dir_columns"] = {
-                    **manifest.get("dir_columns", {}),
-                    data_dir: list(df.columns),
-                }
-                candidate["dir_stats"] = {
-                    **manifest.get("dir_stats", {}),
-                    data_dir: dir_stats,
-                }
-                candidate["dir_rows"] = {
-                    **manifest.get("dir_rows", {}),
-                    **(extra_dir_rows or {}),
-                    data_dir: added,
-                }
-                if file_stats:
-                    candidate["file_stats"] = {
-                        **manifest.get("file_stats", {}), data_dir: file_stats,
-                    }
-                if dir_blooms:
-                    candidate["dir_blooms"] = {
-                        **manifest.get("dir_blooms", {}), data_dir: dir_blooms,
-                    }
-            elif extra_dir_rows:
-                candidate["dir_rows"] = {
-                    **manifest.get("dir_rows", {}),
-                    **extra_dir_rows,
-                }
+                self._add_dir_entries(candidate, data_dir, entries)
             try:
                 # publish at base+1: versions advance independently of
                 # snapshot ids (expire_snapshots bumps versions without
@@ -1497,11 +1562,8 @@ class LakehouseCatalog:
         cond = self._filters_to_column(filters)
         keep = ~F.coalesce(cond, F.lit(False))
         mapping: dict[str, str] = {}
-        new_rows: dict[str, int] = {}
         removed: dict[str, int] = {}
-        new_stats: dict[str, dict] = {}
-        new_cols: dict[str, list[str]] = {}
-        new_blooms: dict[str, dict] = {}
+        new_entries: dict[str, dict] = {}
         tpath = self._table_path(namespace, table)
         affected = [
             d
@@ -1519,27 +1581,20 @@ class LakehouseCatalog:
             old_n = dir_rows.get(d)
             if old_n is None:
                 old_n = df.count()
-            nd, added, stats = self._write_data_dir(
+            nd, added, entries = self._write_data_dir(
                 namespace, table, manifest, df.filter(keep)
             )
             if added == old_n:
                 shutil.rmtree(os.path.join(tpath, nd), ignore_errors=True)
                 return None  # nothing matched in this dir
             if added == 0:
-                # empty rewrite: keep an explicit empty schema-bearing file
-                shutil.rmtree(os.path.join(tpath, nd), ignore_errors=True)
-                os.makedirs(os.path.join(tpath, nd), exist_ok=True)
-                self.spark.createDataFrame([], df.schema).repartition(
-                    1
-                ).write.mode("overwrite").parquet(os.path.join(tpath, nd))
-            blooms = (
-                self._build_dir_blooms(
-                    os.path.join(tpath, nd), manifest["bloom"], dict(df.dtypes)
+                self._keep_empty(namespace, table, nd, entries, df.schema)
+            elif manifest.get("bloom"):
+                entries["dir_blooms"] = self._build_dir_blooms(
+                    os.path.join(tpath, nd), manifest["bloom"], dict(df.dtypes),
+                    entries["dir_schemas"],
                 )
-                if manifest.get("bloom") and added
-                else None
-            )
-            return nd, added, old_n, stats, list(df.columns), blooms
+            return nd, old_n, entries
 
         pool = min(8, len(affected)) or 1
         with ThreadPoolExecutor(max_workers=pool) as ex:
@@ -1561,14 +1616,10 @@ class LakehouseCatalog:
         for d, res in zip(affected, results):
             if res is None:
                 continue
-            nd, added, old_n, stats, cols, blooms = res
+            nd, old_n, entries = res
             mapping[d] = nd
-            new_rows[d] = added
-            removed[d] = old_n - added
-            new_stats[d] = stats
-            new_cols[d] = cols
-            if blooms is not None:
-                new_blooms[d] = blooms
+            removed[d] = old_n - entries["dir_rows"]
+            new_entries[nd] = entries
         if not mapping:
             return {"removed_rows": 0, "rewritten_dirs": 0, "unchanged_dirs": len(live)}
 
@@ -1589,23 +1640,14 @@ class LakehouseCatalog:
             }
             for s in fresh["snapshots"]
         ]
-        for family, extra in (
-            ("dir_columns", new_cols),
-            ("dir_stats", new_stats),
-            ("dir_rows", new_rows),
-            ("dir_blooms", new_blooms),
-        ):
-            fam = {
-                mapping.get(d, d): v
-                for d, v in fresh.get(family, {}).items()
-                if d not in mapping
+        # the replaced dirs' entries go; rewritten dirs carry no file-level
+        # stats (sound: their files changed)
+        for fam in DIR_FAMILIES:
+            candidate[fam] = {
+                d: v for d, v in fresh.get(fam, {}).items() if d not in mapping
             }
-            fam.update({mapping[d]: extra[d] for d in mapping if d in extra})
-            candidate[family] = fam
-        # rewritten dirs lose their file-level stats (sound: files changed)
-        candidate["file_stats"] = {
-            d: s for d, s in fresh.get("file_stats", {}).items() if d not in mapping
-        }
+        for nd, entries in new_entries.items():
+            self._add_dir_entries(candidate, nd, entries)
         total = sum(removed.values())
         candidate["purges"] = [
             *fresh.get("purges", []),
@@ -2344,6 +2386,45 @@ class LakehouseCatalog:
             )
         return snap
 
+    def _recorded_schemas(
+        self,
+        namespace: str,
+        table: str,
+        manifest: dict,
+        dirs: list[str],
+        family: str = "dir_schemas",
+    ) -> dict[str, StructType]:
+        """{dir: file schema} from the manifest (``family`` names the data
+        or delete family).  A manifest written before schemas were
+        recorded is upgraded once, metadata-only: each missing dir's
+        schema is read from one of its parquet footers and published
+        through the CAS, so every later read takes the recorded path.  A
+        handle without WRITE uses what it read and leaves the upgrade to
+        a writer."""
+        recorded = manifest.get(family, {})
+        missing = [d for d in dirs if d not in recorded]
+        if missing:
+            tpath = self._table_path(namespace, table)
+            found = {}
+            for d in missing:
+                # one file read alone: its parent dir is the base path, so
+                # no partition column joins the file's own schema
+                leaf = min(
+                    _glob.glob(os.path.join(tpath, d, "**", "*.parquet"), recursive=True)
+                )
+                found[d] = _file_schema(self.spark.read.parquet(leaf).schema)
+
+            def mutate(m):
+                m[family] = {**m.get(family, {}), **found}
+                return m
+
+            try:
+                self._update_manifest_cas(namespace, table, mutate)
+            except PermissionError:
+                pass
+            recorded = manifest[family] = {**recorded, **found}
+        return {d: _schema_of(recorded[d]) for d in dirs}
+
     def _read_dir_paths(
         self,
         namespace: str,
@@ -2353,9 +2434,12 @@ class LakehouseCatalog:
         file_lists: dict[str, list[str]] | None = None,
     ) -> DataFrame:
         """Read an explicit list of data dirs with read-time schema merge
-        (shared by :meth:`load` and the row-level rewrite ops).
-        ``file_lists`` narrows a dir to an explicit surviving-file subset
-        (file-level data skipping after a clustered rewrite)."""
+        (shared by :meth:`load` and the row-level rewrite ops).  Each dir
+        is read with its recorded file schema, so planning launches no
+        Spark job; hive partition columns are still discovered from the
+        paths, on the driver.  ``file_lists`` narrows a dir to an
+        explicit surviving-file subset (file-level data skipping after a
+        clustered rewrite)."""
         tpath = self._table_path(namespace, table)
 
         def paths_for(d: str) -> list[str]:
@@ -2364,44 +2448,45 @@ class LakehouseCatalog:
                 return [os.path.join(p, rel) for rel in file_lists[d]]
             return [p]
 
-        dir_cols = manifest.get("dir_columns", {})
-        schemas = {tuple(dir_cols[d]) for d in read_dirs if d in dir_cols}
+        schemas = self._recorded_schemas(namespace, table, manifest, read_dirs)
         # partition-spec evolution: dirs written under a RETIRED non-empty
         # spec still have hive layout even when the current spec is empty
         partitioned_any = bool(manifest["partition_by"]) or any(
             h.get("spec") for h in manifest.get("partition_specs", [])
         )
-        if partitioned_any and (len(read_dirs) > 1 or file_lists):
+        merged = (
+            None
+            if partitioned_any and (len(read_dirs) > 1 or file_lists)
+            else _merged_schema([schemas[d] for d in read_dirs])
+        )
+        if merged is None:
             # Hive-partitioned dirs can't share one basePath across
             # multiple snapshot roots (Spark's partition discovery rejects
             # the non-partition data-dir level: CONFLICTING_DIRECTORY_
             # STRUCTURES).  Read each snapshot dir rooted at itself and
             # union; filter/column pushdown applies per branch and
-            # partition pruning still reaches each scan.
+            # partition pruning still reaches each scan.  Frames differ
+            # under schema or spec evolution (derived `_p_…` columns
+            # exist only in their own era's dirs): missing columns read
+            # as NULL.
             from functools import reduce
 
             parts = [
-                self.spark.read.option(
-                    "basePath", os.path.join(tpath, d)
-                ).parquet(*paths_for(d))
+                self.spark.read.schema(schemas[d])
+                .option("basePath", os.path.join(tpath, d))
+                .parquet(*paths_for(d))
                 for d in read_dirs
             ]
-            # spec evolution also makes physical frames differ (derived
-            # `_p_…` columns exist only in their own era's dirs)
-            allow_missing = len(schemas) > 1 or bool(manifest.get("partition_specs"))
             return reduce(
-                lambda a, b: a.unionByName(b, allowMissingColumns=allow_missing),
-                parts,
+                lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
             )
         # One multi-path read (not a unionAll chain): Spark builds a
-        # single file index, so pruning/pushdown span all snapshots.
-        # mergeSchema only when dirs actually differ — it costs extra
-        # footer reads at planning time; don't pay it on the common path.
+        # single file index, so pruning/pushdown span all snapshots; the
+        # merged schema reads columns a dir lacks as NULL.
         paths = [p for d in read_dirs for p in paths_for(d)]
-        reader = self.spark.read.option("basePath", tpath)
-        if len(schemas) > 1:
-            reader = reader.option("mergeSchema", "true")
-        return reader.parquet(*paths)
+        return (
+            self.spark.read.schema(merged).option("basePath", tpath).parquet(*paths)
+        )
 
     def _read_dirs_clean(
         self, namespace: str, table: str, read_dirs: list[str], manifest: dict
@@ -2550,13 +2635,9 @@ class LakehouseCatalog:
                     f"{head['snapshot_id']}; re-plan and retry"
                 )
             sid = len(manifest["snapshots"]) + 1
-            ddir = f"deletes-{sid:05d}-{uuid.uuid4().hex[:8]}"
-            out = os.path.join(self._table_path(namespace, table), ddir)
-            obs = Observation()
-            keys.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
-                "overwrite"
-            ).parquet(out)
-            n_keys = int(obs.get["rows"])
+            ddir, out, n_keys, key_schema = self._write_delete_dir(
+                namespace, table, sid, keys
+            )
             if n_keys == 0:
                 import shutil
 
@@ -2572,7 +2653,7 @@ class LakehouseCatalog:
             # match with eqNullSafe, so a bounds filter is sound only
             # for eq cols whose key set is NULL-free (a NULL key matches
             # NULL rows, which bounds can't locate).
-            kdf = self.spark.read.parquet(out)
+            kdf = self.spark.read.schema(_schema_of(key_schema)).parquet(out)
             total = head.get("row_count")
             if total is None:  # pre-row_count-era manifest: exact fallback
                 remaining = self.load(namespace, table).join(
@@ -2618,17 +2699,14 @@ class LakehouseCatalog:
             }
             candidate = dict(manifest)
             candidate["snapshots"] = [*manifest["snapshots"], new_snap]
-            candidate["delete_dir_cols"] = {
-                **manifest.get("delete_dir_cols", {}),
-                ddir: eq,
-            }
             # Iceberg sequence-number semantics: the delete applies ONLY
             # to data files that existed when it was committed — a row
             # re-inserted later must survive.  Record the scope.
-            candidate["delete_dir_scope"] = {
-                **manifest.get("delete_dir_scope", {}),
-                ddir: list(head["data_dirs"]),
-            }
+            self._add_dir_entries(candidate, ddir, {
+                "delete_dir_cols": eq,
+                "delete_dir_schemas": key_schema,
+                "delete_dir_scope": list(head["data_dirs"]),
+            })
             try:
                 self._publish_manifest(namespace, table, candidate, version=base_version + 1)
             except FileExistsError:
@@ -2726,16 +2804,12 @@ class LakehouseCatalog:
                     f"{cur_head['snapshot_id']}; re-plan and retry"
                 )
             sid = len(manifest["snapshots"]) + 1
-            data_dir, added, dir_stats = self._write_data_dir(
+            data_dir, added, entries = self._write_data_dir(
                 namespace, table, manifest, inserts
             )
-            ddir = f"deletes-{sid:05d}-{uuid.uuid4().hex[:8]}"
-            dout = os.path.join(self._table_path(namespace, table), ddir)
-            obs = Observation()
-            keys.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
-                "overwrite"
-            ).parquet(dout)
-            n_keys = int(obs.get["rows"])
+            ddir, dout, n_keys, key_schema = self._write_delete_dir(
+                namespace, table, sid, keys
+            )
             new_snap = {
                 "snapshot_id": sid,
                 "committed_at": time.time(),
@@ -2754,23 +2828,13 @@ class LakehouseCatalog:
             candidate = dict(manifest)
             candidate["snapshots"] = [*manifest["snapshots"], new_snap]
             if added:
-                candidate["dir_columns"] = {
-                    **manifest.get("dir_columns", {}), data_dir: list(inserts.columns)
-                }
-                candidate["dir_stats"] = {
-                    **manifest.get("dir_stats", {}), data_dir: dir_stats
-                }
-                candidate["dir_rows"] = {
-                    **manifest.get("dir_rows", {}), data_dir: added
-                }
+                self._add_dir_entries(candidate, data_dir, entries)
             if n_keys:
-                candidate["delete_dir_cols"] = {
-                    **manifest.get("delete_dir_cols", {}), ddir: list(equality_cols)
-                }
-                candidate["delete_dir_scope"] = {
-                    **manifest.get("delete_dir_scope", {}),
-                    ddir: list(head["data_dirs"]),
-                }
+                self._add_dir_entries(candidate, ddir, {
+                    "delete_dir_cols": list(equality_cols),
+                    "delete_dir_schemas": key_schema,
+                    "delete_dir_scope": list(head["data_dirs"]),
+                })
             import shutil
 
             if added == 0:
@@ -3055,10 +3119,9 @@ class LakehouseCatalog:
                     )
                     else list(snap.get("columns") or manifest.get("columns") or [])
                 )
-                any_dir = os.path.join(
-                    self._table_path(namespace, table), snap["data_dirs"][0]
-                )
-                empty = self.spark.read.parquet(any_dir).limit(0)
+                empty = self._read_dir_paths(
+                    namespace, table, snap["data_dirs"][:1], manifest
+                ).limit(0)
                 empty = self._apply_schema_evolution(
                     empty, manifest, list(manifest.get("columns") or [])
                 )
@@ -3171,9 +3234,12 @@ class LakehouseCatalog:
             df = df.withColumn(
                 "__dir", F.regexp_extract(F.input_file_name(), r"/(data-[^/]+)/", 1)
             )
+            key_schemas = self._recorded_schemas(
+                namespace, table, manifest, del_dirs, "delete_dir_schemas"
+            )
             for ddir in del_dirs:
                 dpath = os.path.join(self._table_path(namespace, table), ddir)
-                keys = self.spark.read.parquet(dpath)
+                keys = self.spark.read.schema(key_schemas[ddir]).parquet(dpath)
                 eq = ddc[ddir]
                 keys = keys.select(
                     *[F.col(c).alias(f"__k_{c}") for c in eq]

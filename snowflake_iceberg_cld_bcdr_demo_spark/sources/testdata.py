@@ -17,6 +17,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TESTDATA_TABLES = (
     "region",
@@ -49,13 +50,27 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-        df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+        df = _read(spark, os.path.join(sf_dir, "events.parquet"))
         if dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn(
                 "ts", F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz")
             )
         return df
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return _read(spark, os.path.join(sf_dir, f"{name}.parquet"))
+
+
+#: file schema per (path, mtime_ns, size): a rewritten file gets a new key
+_SCHEMAS: dict[tuple[str, int, int], StructType] = {}
+
+
+def _read(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema once per file
+    version: inference is a Spark job, paid on every call otherwise."""
+    st = os.stat(path)
+    key = (path, st.st_mtime_ns, st.st_size)
+    if key not in _SCHEMAS:
+        _SCHEMAS[key] = spark.read.parquet(path).schema
+    return spark.read.schema(_SCHEMAS[key]).parquet(path)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

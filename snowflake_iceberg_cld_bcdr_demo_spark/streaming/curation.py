@@ -191,15 +191,13 @@ def _admit_batch(
     # Fan out from the DURABLE decision artifact — first run and crash
     # replay take the identical path; each append below is additionally
     # batch_id-guarded, so a replay no-ops the ones that committed
-    # before a crash.
+    # before a crash.  The batch_id filter prunes on the manifest's
+    # per-dir bounds, so the read stays O(batch) as staging grows.
     admitted = (
-        catalog.load(namespace, staging_table)
-        .filter(
-            (F.col("batch_id") == batch_id)
-            # null-safe: two stream lineages may both have a batch 0
-            # staged; only THIS writer's trail replays
-            & F.col("writer_id").eqNullSafe(F.lit(writer_id).cast("string"))
-        )
+        catalog.load(namespace, staging_table, filters=[("batch_id", "=", batch_id)])
+        # null-safe: two stream lineages may both have a batch 0
+        # staged; only THIS writer's trail replays
+        .filter(F.col("writer_id").eqNullSafe(F.lit(writer_id).cast("string")))
         .drop("batch_id", "writer_id")
     )
     if admitted.isEmpty():

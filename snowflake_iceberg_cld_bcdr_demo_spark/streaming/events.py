@@ -292,22 +292,11 @@ def incremental_snapshot_read(
     new_dirs = [d for d in main[-1].data_dirs if d not in seen]
     if not new_dirs:
         return None, latest
-    import os
-    from functools import reduce
-
-    base = catalog._table_path(namespace, table)
-    # One read per data dir, each rooted at that dir: hive-partitioned
-    # dirs (date_key=...) keep their partition column without the
-    # data-dir level confusing partition discovery across snapshots.
-    parts = [
-        catalog.spark.read.option("basePath", os.path.join(base, d)).parquet(
-            os.path.join(base, d)
-        )
-        for d in new_dirs
-    ]
-    # allowMissingColumns: delta dirs may span a schema evolution
-    # (append-with-new-column) — older dirs read the missing column as NULL
-    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts), latest
+    # the catalog's own dir read: recorded file schemas (no inference
+    # job), missing columns NULL across a schema evolution, hidden
+    # partition fields stripped and ALTER TABLE renames applied
+    manifest = catalog._read_manifest(namespace, table)
+    return catalog._read_dirs_clean(namespace, table, new_dirs, manifest), latest
 
 
 def stream_stream_join(

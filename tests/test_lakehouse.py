@@ -753,3 +753,186 @@ def test_curated_corpus_ships_as_lakehouse_table(spark, cat):
     assert v1.count() == n1
     assert sorted(r.doc_id for r in v1.collect()) == \
         sorted(r.doc_id for r in d1.filter("curated").select("doc_id").collect())
+
+
+# -- zero-job reads: each dir's file schema lives in the manifest ---------
+
+WIDE_DIRS = 40
+
+
+def _day(spark, i, extra=False):
+    """Five rows of one ``date_key`` day, written as one file."""
+    df = spark.range(i * 5, i * 5 + 5, 1, 1).select(
+        F.col("id"),
+        (F.col("id") % 3).cast("int").alias("v"),
+        F.lit(f"2024-{1 + i // 28:02d}-{1 + i % 28:02d}").alias("date_key"),
+    )
+    return df.withColumn("extra", F.col("id") * 2) if extra else df
+
+
+def _copy_table(cat, src, dst):
+    import shutil
+
+    shutil.copytree(cat._table_path("db", src), cat._table_path("db", dst))
+
+
+def _jobs(spark, fn):
+    """(result, number of Spark jobs ``fn`` launched)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"lakehouse-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _inferred(monkeypatch, cat, table, **kw):
+    """The same load with every given schema replaced by Spark's own
+    parquet inference, merged across files: the read before the manifest
+    recorded schemas."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    with monkeypatch.context() as m:
+        m.setattr(
+            DataFrameReader, "schema", lambda self, _s: self.option("mergeSchema", "true")
+        )
+        return cat.load("db", table, **kw)
+
+
+@pytest.fixture(scope="module")
+def wide(spark, tmp_path_factory):
+    """One catalog holding every read shape, built once:
+
+    - ``part``: 40 one-day dirs, ``date_key``-partitioned;
+    - ``ddl``: ``part`` after ``alter_table`` (rename, add);
+    - ``spec``: ``part`` after a partition-spec change and two appends;
+    - ``unpart``: 40 unpartitioned dirs, every other one with a column more;
+    - ``hidden``: transform partitions (months, bucket);
+    - ``empty``: an empty partitioned create, then appends;
+    - ``mor``: outstanding merge-on-read deletes (delete and upsert)."""
+    cat = LakehouseCatalog(spark, str(tmp_path_factory.mktemp("wide") / "wh"))
+    for i in range(WIDE_DIRS):
+        if i == 0:
+            cat.create_table("db", "part", _day(spark, i), partition_by=["date_key"])
+            cat.create_table("db", "unpart", _day(spark, i))
+        else:
+            cat.append("db", "part", _day(spark, i))
+            cat.append("db", "unpart", _day(spark, i, extra=i % 2 == 1))
+    _copy_table(cat, "part", "ddl")
+    cat.alter_table("db", "ddl", rename_columns={"v": "w"}, add_columns={"note": "string"})
+    _copy_table(cat, "part", "spec")
+    cat.alter_partition_spec("db", "spec", ["bucket(4, id)"])
+    for i in (WIDE_DIRS, WIDE_DIRS + 1):
+        cat.append("db", "spec", _day(spark, i))
+    cat.create_table(
+        "db", "hidden", _day(spark, 0), partition_by=["months(date_key)", "bucket(2, id)"]
+    )
+    cat.append("db", "hidden", _day(spark, 30, extra=True))
+    cat.create_table("db", "empty", _day(spark, 0).limit(0), partition_by=["date_key"])
+    cat.append("db", "empty", _day(spark, 1))
+    cat.append("db", "empty", _day(spark, 2, extra=True))
+    cat.create_table("db", "mor", _day(spark, 0))
+    cat.append("db", "mor", _day(spark, 1))
+    cat.delete_where_mor("db", "mor", [("v", "=", 1)], equality_cols=["id"])
+    cat.upsert_mor(
+        "db", "mor", _day(spark, 1).withColumn("v", F.lit(9)), equality_cols=["id"]
+    )
+    for table in ("part", "ddl", "spec", "unpart"):
+        assert len(cat.current_snapshot("db", table).data_dirs) >= WIDE_DIRS
+    return cat
+
+
+@pytest.mark.parametrize(
+    "table, kw",
+    [
+        ("part", {}),
+        ("ddl", {}),
+        ("spec", {}),
+        ("spec", {"filters": [("id", "=", 7)]}),
+        ("unpart", {}),
+        ("unpart", {"snapshot_id": 1}),
+        ("hidden", {}),
+        ("empty", {}),
+        ("empty", {"snapshot_id": 1}),
+        ("mor", {}),
+        ("part", {"filters": [("id", "<", -1)]}),  # every dir pruned
+    ],
+)
+def test_load_reads_recorded_schemas(spark, wide, monkeypatch, table, kw):
+    """``load()`` takes every dir's schema from the manifest: no Spark
+    job before an action, at 40 data dirs as at one, and the same schema
+    and rows as Spark's own inference gives, for every read shape."""
+    got, jobs = _jobs(spark, lambda: wide.load("db", table, **kw))
+    assert jobs == 0
+    want = _inferred(monkeypatch, wide, table, **kw)
+    assert got.schema == want.schema
+    assert sorted(got.collect(), key=repr) == sorted(want.collect(), key=repr)
+
+
+@pytest.mark.parametrize("table", ["empty", "mor"])
+def test_legacy_manifest_upgrades_once(spark, wide, table):
+    """A manifest written before schemas were recorded infers the missing
+    dirs' schemas once (data and delete dirs) and publishes them; later
+    loads launch no job and read what the recorded schemas read."""
+    import glob
+    import json
+
+    legacy = f"legacy_{table}"
+    _copy_table(wide, table, legacy)
+    for path in glob.glob(os.path.join(wide._table_path("db", legacy), "_manifest*.json")):
+        with open(path) as f:
+            m = json.load(f)
+        m.pop("dir_schemas")
+        m.pop("delete_dir_schemas", None)
+        with open(path, "w") as f:
+            json.dump(m, f)
+    first, upgrade_jobs = _jobs(spark, lambda: wide.load("db", legacy))
+    assert upgrade_jobs > 0
+    again, jobs = _jobs(spark, lambda: wide.load("db", legacy))
+    assert jobs == 0
+    recorded = wide._read_manifest("db", table)
+    upgraded = wide._read_manifest("db", legacy)
+    assert upgraded["dir_schemas"]
+    for fam in ("dir_schemas", "delete_dir_schemas"):
+        got = upgraded.get(fam, {})
+        assert got == {d: recorded[fam][d] for d in got}  # what a commit records
+    want = wide.load("db", table)
+    for df in (first, again):
+        assert df.schema == want.schema
+        assert sorted(df.collect(), key=repr) == sorted(want.collect(), key=repr)
+
+
+def test_fanout_staging_read_prunes_to_one_dir(spark, cat):
+    """The stream fan-out reads staging with a ``batch_id`` filter: the
+    manifest bounds keep exactly the one dir of that batch."""
+    for b in range(3):
+        staged = _day(spark, b).withColumn("batch_id", F.lit(b))
+        if b == 0:
+            cat.create_table("db", "staging", staged, batch_id=b)
+        else:
+            cat.append("db", "staging", staged, batch_id=b)
+    dirs = cat.current_snapshot("db", "staging").data_dirs
+    for b in range(3):
+        kept = cat.prune_preview("db", "staging", [("batch_id", "=", b)])["kept"]
+        assert kept == [dirs[b]]
+
+
+def test_incremental_read_uses_recorded_schemas(spark, wide):
+    """The streaming incremental reader reads the new dirs the catalog's
+    way: no inference job, hidden partition fields stripped."""
+    from snowflake_iceberg_cld_bcdr_demo_spark.streaming.events import (
+        incremental_snapshot_read,
+    )
+
+    (delta, latest), jobs = _jobs(
+        spark, lambda: incremental_snapshot_read(wide, "db", "hidden", after_snapshot_id=1)
+    )
+    assert jobs == 0 and latest == 2
+    want = wide.load("db", "hidden").filter(F.col("id") >= 150)
+    assert delta.columns == want.columns
+    assert sorted(delta.collect(), key=repr) == sorted(want.collect(), key=repr)

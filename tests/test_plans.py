@@ -230,3 +230,26 @@ def test_embedding_decontaminate_ivf_no_nested_loop(spark):
     plan = _plan(spark, "embedding_decontaminate_ivf")
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
+
+
+def test_testdata_table_infers_each_file_schema_once(spark):
+    """``sources.testdata.table`` keeps each file's schema: reading a
+    table again launches no schema-inference job and gives the same
+    schema (``events`` included: nanos read as long, then cast)."""
+    import uuid
+
+    from snowflake_iceberg_cld_bcdr_demo_spark.sources import testdata
+
+    for name in ("lineitem", "events"):
+        first = testdata.table(spark, SF_SMALL, name)
+        sc = spark.sparkContext
+        group = f"testdata-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            again = testdata.table(spark, SF_SMALL, name)
+        finally:
+            sc.setJobGroup(None, None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        assert again.schema == first.schema
+    assert dict(again.dtypes)["ts"] == "timestamp_ntz"
