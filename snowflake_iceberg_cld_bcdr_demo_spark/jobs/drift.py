@@ -59,10 +59,6 @@ def export_schema_metadata(
     return len(rows)
 
 
-def _meta(monitoring: LakehouseCatalog, table: str) -> DataFrame:
-    return monitoring.load("monitoring", table)
-
-
 def detect_schema_drift(
     spark: SparkSession,
     primary_meta: DataFrame,

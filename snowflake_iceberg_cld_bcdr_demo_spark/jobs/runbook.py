@@ -98,20 +98,3 @@ def build_reference_schedule(
         )
     return sched
 
-
-def add_maintenance_task(
-    sched: Scheduler,
-    cat: LakehouseCatalog,
-    namespace: str,
-    interval_s: float = 24 * 3600.0,
-) -> None:
-    """Wire daily lakehouse upkeep (compact / expire / orphan sweep — see
-    :func:`..jobs.cleanup.table_maintenance`) into a schedule, at the same
-    daily cadence as the reference's cron maintenance (`33:504-509`)."""
-    from . import cleanup
-
-    sched.add(
-        "table_maintenance",
-        lambda: cleanup.table_maintenance(cat, namespace),
-        interval_s,
-    )

@@ -17,8 +17,6 @@ needs on top.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -1588,22 +1586,6 @@ def curated_corpus(
 
     spark = docs.sparkSession
 
-    if os.environ.get("SPARK_GRAFT_STAGE_TIMING") == "1":
-        import sys as _sys
-        import time as _time
-
-        _t_entry = _time.perf_counter()
-
-        def _mark(label: str) -> None:
-            print(
-                f"# mark {label}: t+{_time.perf_counter() - _t_entry:.3f}s",
-                file=_sys.stderr,
-            )
-    else:
-
-        def _mark(label: str) -> None:
-            pass
-
     def stage(df: DataFrame, name: str) -> DataFrame:
         if stage_dir is None:
             # in-memory form: truncate lineage with a LAZY local
@@ -1618,33 +1600,7 @@ def curated_corpus(
         path = f"{stage_dir}/{name}"
         sc = spark.sparkContext
         sc.setJobDescription(f"curated_corpus: stage {name}")
-        plan_dir = os.environ.get("SPARK_GRAFT_STAGE_PLAN_DIR")
-        if plan_dir:
-            # measurement hook (guide §1/§7.2): the stage WRITES are
-            # where the pipeline's exchanges live, but the registry
-            # captures only the post-stage tail plan — dump each stage
-            # job's formatted plan so shuffle counts are auditable
-            import contextlib
-            import io
-
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                df.explain("formatted")
-            os.makedirs(plan_dir, exist_ok=True)
-            with open(f"{plan_dir}/stage_{name}.txt", "w") as fh:
-                fh.write(buf.getvalue())
-        if os.environ.get("SPARK_GRAFT_STAGE_TIMING") == "1":
-            import sys
-            import time
-
-            t0 = time.perf_counter()
-            df.write.mode("overwrite").parquet(path)
-            print(
-                f"# stage {name}: {time.perf_counter() - t0:.3f}s",
-                file=sys.stderr,
-            )
-        else:
-            df.write.mode("overwrite").parquet(path)
+        df.write.mode("overwrite").parquet(path)
         sc.setJobDescription(None)
         return spark.read.parquet(path)
 
@@ -1671,7 +1627,6 @@ def curated_corpus(
     # materialization point: it feeds ExactSubstr's two plan branches,
     # which require a DETERMINISTIC input (the stage table guarantees it).
     bp = extract.remove_boilerplate_ngrams(d1, n=5, min_docs=3)
-    _mark("pre-d2")
     d2 = stage(
         d1.select("doc_id", "source", "n_raw_tokens", "n_collapsed").join(
             bp.select(
@@ -1727,7 +1682,6 @@ def curated_corpus(
     # the per-train-doc dedup verdicts — staged so the expensive minhash
     # band join is evaluated ONCE (the survivor selection below and the
     # final flag assembly both consume it)
-    _mark("pre-dedup_flags")
     dflags = stage(
         ek.join(nd_drop, "doc_id", "left").select(
             "doc_id",
@@ -1788,7 +1742,6 @@ def curated_corpus(
     # corpus — the stage table a production build audits — and feeds
     # four independent gates, so it is the second text materialization.
     pii = pii_scrub(d3)
-    _mark("pre-scrubbed")
     d4 = stage(
         d3.select(
             "doc_id",
@@ -1824,7 +1777,6 @@ def curated_corpus(
     # top-fraction rank gate (scale: the rank window partitions by
     # source — the source_quota shape, never a global single-reducer
     # sort; WindowGroupLimit bounds the per-source cost)
-    _mark("pre-nb")
     # source rides through the scoring projection (passthrough) instead
     # of a post-hoc join back to d4 by doc_id — same rows, one join less
     trn_scores = nb_quality_scores(
@@ -1859,9 +1811,7 @@ def curated_corpus(
     # the documented deterministic stand-in; with fewer eval vectors
     # than probes the exact operator is the cheaper path anyway.
     ev = F.col("vec_id") % eval_mod == 0
-    _mark("pre-centroids")
     cents = sample_centroids(embeddings, k=8)
-    _mark("post-centroids")
     if len(cents) >= 2:
         sem = embedding_decontaminate_ivf(
             embeddings.filter(~ev),
@@ -1985,9 +1935,7 @@ def curated_corpus(
             "media_ok",
         )
     )
-    _mark("pre-flags")
     flags = stage(flags, "flags")
-    _mark("post-flags")
     survivor = (
         ~F.col("is_eval")
         & F.col("e_keep")
@@ -2064,9 +2012,10 @@ def admission_state(
     - ``nb_tau``: per-source frozen operating points (``source,
       nb_tau``) — the corpus's own ``nb_top_frac`` rank-cut scores.
 
-    Values are bit-identical to what the admit recomputes from
-    ``existing_docs`` directly (the equality is pytest-pinned), so the
-    state path changes COST, not decisions."""
+    :func:`curated_incremental_admit` given ``existing_docs`` builds
+    exactly these tables and gates against them, so the persisted path
+    changes COST, not decisions (pytest-pinned through a parquet round
+    trip)."""
     from pyspark.sql import Window
 
     from ..functions.text import bpe_piece_count, fingerprint
@@ -2224,16 +2173,19 @@ def curated_incremental_admit(
     model + per-source token totals); nothing batch-sized ever shuffles
     the corpus.
 
-    ``state`` (any subset of :func:`admission_state`'s five tables)
-    replaces the corresponding corpus recomputation with the persisted
-    artifact — with ALL five present, ``existing_docs`` may be None and
-    the corpus is NEVER TOUCHED: the admit's cost becomes O(batch +
-    state tables), the true daily-ingest posture.  Values are
-    bit-identical either way (pytest-pinned); the oracle replays the
-    recompute path.  ``include_text`` appends the batch's SCRUBBED text
-    as a final ``text`` column (off by default — the certified trail
-    schema), so a sink can append admitted rows to the corpus under the
-    shipped-text contract.
+    Every gate reads the admission index (:func:`admission_state`'s
+    five tables).  ``state`` passes it in persisted — with ALL five
+    present, ``existing_docs`` may be None and the corpus is NEVER
+    TOUCHED: the admit's cost becomes O(batch + state tables), the true
+    daily-ingest posture.  Given ``existing_docs``, the admit recomputes
+    the index with :func:`admission_state` and then takes the same state
+    path; tables passed in ``state`` replace their recomputed
+    counterparts.  The independent reference is the DuckDB oracle of
+    ``curated_incremental_admit_q``, which replays the recompute
+    arithmetic from the corpus.  ``include_text`` appends the batch's
+    SCRUBBED text as a final ``text`` column (off by default — the
+    certified trail schema), so a sink can append admitted rows to the
+    corpus under the shipped-text contract.
 
     ``new_embeddings`` (``doc_id, embedding``) arms the SEMANTIC
     admission gate: each batch doc's vector probes the corpus's frozen
@@ -2245,16 +2197,30 @@ def curated_incremental_admit(
     trail (docs with no vector pass — no evidence, no veto); admitted
     additionally requires it.  Off by default — the certified trail
     schema is unchanged."""
+    from ..functions.text import fingerprint
     from . import textops
     from .dedup import _banded_signatures
-
-    from ..functions.text import bpe_piece_count, fingerprint
 
     st = dict(state or {})
     bad = set(st) - _ADMISSION_STATE_KEYS - _ADMISSION_STATE_OPTIONAL
     if bad:
         raise ValueError(f"curated_incremental_admit: unknown state keys {sorted(bad)}")
-    if existing_docs is None and (missing := _ADMISSION_STATE_KEYS - set(st)):
+    if existing_docs is not None:
+        # recompute = build the admission index, then take the state
+        # path; tables passed in `state` win over the recomputed ones
+        st = {
+            **admission_state(
+                existing_docs,
+                nb_target,
+                nb_top_frac=nb_top_frac,
+                buckets=nb_buckets,
+                text_col=text_col,
+                id_col=id_col,
+                group_col=group_col,
+            ),
+            **st,
+        }
+    elif missing := _ADMISSION_STATE_KEYS - set(st):
         raise ValueError(
             "curated_incremental_admit: existing_docs=None requires full "
             f"state; missing {sorted(missing)}"
@@ -2271,15 +2237,6 @@ def curated_incremental_admit(
         F.col(id_col).alias("doc_id"),
         F.col(group_col).alias("source"),
         F.col(text_col).alias("text"),
-    )
-    base_ex = (
-        existing_docs.select(
-            F.col(id_col).alias("doc_id"),
-            F.col(group_col).alias("source"),
-            F.col(text_col).alias("text"),
-        )
-        if existing_docs is not None
-        else None
     )
 
     # 0. scrub of the batch text (the shipped-text contract): repetition
@@ -2376,16 +2333,12 @@ def curated_incremental_admit(
     # fingerprint window, instead of one per gate join)
     from pyspark.sql import Window
 
-    # distinct on BOTH paths: admission_state builds fingerprints
-    # distinct, but a user-supplied or externally-maintained table may
-    # not be — duplicate keys would multiply batch rows through the left
-    # join below (duplicate trail rows, double-counted admitted tokens).
+    # distinct again: admission_state builds fingerprints distinct, but
+    # a user-supplied or externally-maintained table may not be —
+    # duplicate keys would multiply batch rows through the left join
+    # below (duplicate trail rows, double-counted admitted tokens).
     # Fingerprints are 32-byte keys; the dedup is cheap.
-    ex_fp = (
-        st["fingerprints"].select(F.col("fingerprint").alias("_fp")).distinct()
-        if "fingerprints" in st
-        else base_ex.select(fingerprint(F.col("text")).alias("_fp")).distinct()
-    )
+    ex_fp = st["fingerprints"].select(F.col("fingerprint").alias("_fp")).distinct()
     nfp = base_new.withColumn("_fp", fingerprint(F.col("text")))
     # corpus anti-membership as a PROBE: the corpus fingerprint table is
     # semi-joined against the (small, broadcast) batch fingerprints, and
@@ -2417,12 +2370,7 @@ def curated_incremental_admit(
 
     # 2. near-dup vs the existing corpus (batch side broadcasts)
     nbnd = _banded_signatures(base_new, "text", "doc_id")
-    ebnd = (
-        st["signatures"]
-        if "signatures" in st
-        else _banded_signatures(base_ex, "text", "doc_id")
-    )
-    n_, e_ = nbnd.alias("n"), ebnd.alias("e")
+    n_, e_ = nbnd.alias("n"), st["signatures"].alias("e")
     agree = sum(
         F.when(F.col(f"n.h{i}") == F.col(f"e.h{i}"), 1).otherwise(0)
         for i in range(16)
@@ -2444,44 +2392,22 @@ def curated_incremental_admit(
         .withColumn("_nd_drop", F.lit(True))
     )
 
-    # 3. frozen NB model + frozen operating point: fit on the corpus,
-    # self-score it to locate the per-source nb_top_frac rank-cut score,
-    # then score the batch against that threshold
-    if "nb_tau" in st:
-        tau = st["nb_tau"].select("source", F.col("nb_tau").alias("_tau"))
-    else:
-        ex_scores = nb_quality_scores(base_ex, nb_target, buckets=nb_buckets).select(
-            "doc_id", "nb_logodds"
-        )
-        wsrc = Window.partitionBy("source").orderBy(
-            F.col("nb_logodds").desc_nulls_last(), F.col("doc_id")
-        )
-        wcnt = Window.partitionBy("source")
-        tau = (
-            base_ex.select("doc_id", "source")
-            .join(ex_scores, "doc_id")
-            .withColumn("_rk", F.row_number().over(wsrc))
-            .withColumn(
-                "_cut",
-                F.ceil(F.lit(float(nb_top_frac)) * F.count(F.lit(1)).over(wcnt)),
-            )
-            .filter(F.col("_rk") == F.col("_cut"))
-            .select("source", F.col("nb_logodds").alias("_tau"))
-        )
-    # nb_buckets governs the recompute fit; a frozen state model carries
-    # its own `_buckets` column and scores with THAT (see
-    # nb_quality_scores), so a codebook mismatch cannot silently
-    # mis-score the batch.  Scoring CHAINS on the gated batch frame
-    # (``passthrough``) — the model is a broadcast one-row map, so the
-    # inline form adds zero shuffles and drops the former score join
-    # back by doc_id.
+    # 3. frozen NB model + frozen operating point (the corpus's
+    # per-source nb_top_frac rank-cut score).  A model built by nb_model
+    # carries its own `_buckets` column and scores with THAT (see
+    # nb_quality_scores; nb_buckets governs the recompute fit and legacy
+    # models only), so a codebook mismatch cannot silently mis-score the
+    # batch.  Scoring CHAINS on the gated batch frame (``passthrough``)
+    # — the model is a broadcast one-row map, so the inline form adds
+    # zero shuffles and drops the former score join back by doc_id.
+    tau = st["nb_tau"].select("source", F.col("nb_tau").alias("_tau"))
     scored = (
         nb_quality_scores(
-            base_ex,
-            nb_target,
+            None,
+            None,
             buckets=nb_buckets,
             score_docs=gated,
-            model=st.get("nb_model"),
+            model=st["nb_model"],
             passthrough=(
                 "source",
                 "text",
@@ -2502,15 +2428,6 @@ def curated_incremental_admit(
             & (F.col("nb_logodds") >= F.col("_tau")),
         )
         .drop("_tau")
-    )
-
-    # 4. remaining mixture budget: per-source tokens already consumed
-    consumed = (
-        st["consumed"]
-        if "consumed" in st
-        else base_ex.groupBy("source").agg(
-            F.sum(bpe_piece_count(F.col("text")).cast("long")).alias("consumed")
-        )
     )
 
     # optional semantic gate: batch vectors probe the corpus's FROZEN
@@ -2574,7 +2491,8 @@ def curated_incremental_admit(
         ),
         token_budget,
         shares,
-        consumed=consumed,
+        # 4. remaining mixture budget: per-source tokens already consumed
+        consumed=st["consumed"],
     ).select("doc_id", F.lit(True).alias("_adm"), F.col("n_tokens").alias("_mt"))
     # the admission verdict is bounded by the batch (the operator's
     # standing posture: the batch side broadcasts — fp probe, banded

@@ -42,6 +42,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .textops import _bm25_rank, _bm25_weight
+
 INDEX_TABLES = ("postings", "doclens")
 
 
@@ -225,46 +227,7 @@ def bm25_search_indexed(
         .join(F.broadcast(stats))
         .join(F.broadcast(dfs))
     )
-
-    def _term_score(i: int):
-        tf = F.col(f"_tf{i}").cast("double")
-        idf = F.log(
-            F.lit(1.0)
-            + (F.col("n_docs").cast("double") - F.col(f"_df{i}") + F.lit(0.5))
-            / (F.col(f"_df{i}").cast("double") + F.lit(0.5))
-        )
-        norm = tf + F.lit(float(k1)) * (
-            F.lit(float(1.0 - b))
-            + F.lit(float(b)) * F.col("dl").cast("double") / F.col("avgdl")
-        )
-        return idf * (tf * F.lit(float(k1 + 1.0)) / norm)
-
-    score = _term_score(0)
-    for i in range(1, len(terms)):
-        score = score + _term_score(i)
-    n_matched = sum(
-        ((F.col(f"_tf{i}") > 0).cast("int") for i in range(len(terms))),
-        start=F.lit(0),
-    )
-    from pyspark.sql import Window
-
-    ranked = (
-        joined.select(
-            "doc_id",
-            n_matched.alias("n_matched"),
-            "dl",
-            F.round(score, 8).alias("score"),
-        )
-        .filter(F.col("n_matched") >= 1)
-        .orderBy(F.col("score").desc(), F.col("doc_id"))
-        .limit(top_k)
-    )
-    return ranked.withColumn(
-        "rank",
-        F.row_number().over(
-            Window.orderBy(F.col("score").desc(), F.col("doc_id"))
-        ),
-    ).select("doc_id", "n_matched", "dl", "score", "rank")
+    return _bm25_rank(joined, len(terms), k1, b, top_k)
 
 
 def phrase_search_indexed(
@@ -423,23 +386,14 @@ def bm25_search_many(
         .join(doclens, "doc_id")
         .join(F.broadcast(stats))
     )
-    tf = F.col("tf").cast("double")
-    idf = F.log(
-        F.lit(1.0)
-        + (F.col("n_docs").cast("double") - F.col("df") + F.lit(0.5))
-        / (F.col("df").cast("double") + F.lit(0.5))
-    )
-    norm = tf + F.lit(float(k1)) * (
-        F.lit(float(1.0 - b))
-        + F.lit(float(b)) * F.col("dl").cast("double") / F.col("avgdl")
-    )
-    contrib = idf * (tf * F.lit(float(k1 + 1.0)) / norm)
     folded = (
         matched.select(
             "query_id",
             "doc_id",
             "dl",
-            F.struct(F.col("term"), contrib.alias("c")).alias("tc"),
+            F.struct(
+                F.col("term"), _bm25_weight("tf", "df", k1, b).alias("c")
+            ).alias("tc"),
         )
         .groupBy("query_id", "doc_id")
         .agg(

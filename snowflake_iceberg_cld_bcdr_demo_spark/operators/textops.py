@@ -908,30 +908,45 @@ def bm25_search(
     ).withColumn(
         "avgdl", F.col("total_tokens").cast("double") / F.col("n_docs")
     )
-    joined = per.join(F.broadcast(stats))
+    return _bm25_rank(per.join(F.broadcast(stats)), len(terms), k1, b, top_k)
 
-    def _term_score(i: int):
-        tf = F.col(f"_tf{i}").cast("double")
-        idf = F.log(
-            F.lit(1.0)
-            + (F.col("n_docs").cast("double") - F.col(f"_df{i}") + F.lit(0.5))
-            / (F.col(f"_df{i}").cast("double") + F.lit(0.5))
-        )
-        norm = tf + F.lit(float(k1)) * (
-            F.lit(float(1.0 - b))
-            + F.lit(float(b)) * F.col("dl").cast("double") / F.col("avgdl")
-        )
-        return idf * (tf * F.lit(float(k1 + 1.0)) / norm)
 
-    score = _term_score(0)
-    for i in range(1, len(terms)):
-        score = score + _term_score(i)
-    n_matched = sum(
-        ((F.col(f"_tf{i}") > 0).cast("int") for i in range(len(terms))),
-        start=F.lit(0),
+def _bm25_weight(tf: str, df: str, k1: float, b: float):
+    """One query term's Okapi BM25 contribution from the ``tf`` and
+    ``df`` columns and the ``n_docs``/``dl``/``avgdl`` corpus-stats
+    columns (Lucene idf) — the one weight every BM25 scorer uses
+    (:func:`bm25_search` and the index-served
+    :func:`.retrieval.bm25_search_indexed` /
+    :func:`.retrieval.bm25_search_many`)."""
+    tfd = F.col(tf).cast("double")
+    idf = F.log(
+        F.lit(1.0)
+        + (F.col("n_docs").cast("double") - F.col(df) + F.lit(0.5))
+        / (F.col(df).cast("double") + F.lit(0.5))
     )
+    norm = tfd + F.lit(float(k1)) * (
+        F.lit(float(1.0 - b))
+        + F.lit(float(b)) * F.col("dl").cast("double") / F.col("avgdl")
+    )
+    return idf * (tfd * F.lit(float(k1 + 1.0)) / norm)
+
+
+def _bm25_rank(
+    joined: DataFrame, n_terms: int, k1: float, b: float, top_k: int
+) -> DataFrame:
+    """The single-query BM25 tail over per-doc ``_tf{i}``/``_df{i}``
+    columns: fold the term weights left to right in term order, round to
+    8 places, keep matched docs, and rank the top-k by (score DESC,
+    id)."""
     from pyspark.sql import Window
 
+    score = _bm25_weight("_tf0", "_df0", k1, b)
+    for i in range(1, n_terms):
+        score = score + _bm25_weight(f"_tf{i}", f"_df{i}", k1, b)
+    n_matched = sum(
+        ((F.col(f"_tf{i}") > 0).cast("int") for i in range(n_terms)),
+        start=F.lit(0),
+    )
     ranked = (
         joined.select(
             "doc_id",

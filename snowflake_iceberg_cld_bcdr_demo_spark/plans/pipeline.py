@@ -17,25 +17,10 @@ from pyspark.sql import functions as F
 
 from ..operators import corpus, dedup, extract, retrieval, similarity, textops
 from ..sources.testdata import table
-from .registry import QuerySpec
+from .registry import QuerySpec, spec_decorator
 
 SPECS: list[QuerySpec] = []
-
-
-def _spec(name: str, oracle: str | None, doc: str = "", changed_in: int = 0):
-    def wrap(fn):
-        SPECS.append(
-            QuerySpec(
-                name=name,
-                build=fn,
-                oracle=oracle,
-                doc=doc or (fn.__doc__ or ""),
-                changed_in=changed_in,
-            )
-        )
-        return fn
-
-    return wrap
+_spec = spec_decorator(SPECS)
 
 
 # Deterministic hyperplanes for the ANN scale path (fixed seed → stable

@@ -36,12 +36,39 @@ class QuerySpec:
     changed_in: int = 0
 
 
+def spec_decorator(specs: list[QuerySpec]) -> Callable:
+    """The query-module decorator ``@_spec(name, oracle, doc="",
+    changed_in=0)``: registers the decorated builder as a
+    :class:`QuerySpec` appended to ``specs`` (the module's ``SPECS``, so
+    registration order is definition order); ``doc`` defaults to the
+    builder's docstring."""
+
+    def _spec(
+        name: str, oracle: str | None, doc: str = "", changed_in: int = 0
+    ) -> Callable:
+        def wrap(fn: Callable[[SparkSession, str], DataFrame]):
+            specs.append(
+                QuerySpec(
+                    name=name,
+                    build=fn,
+                    oracle=oracle,
+                    doc=doc or (fn.__doc__ or ""),
+                    changed_in=changed_in,
+                )
+            )
+            return fn
+
+        return wrap
+
+    return _spec
+
+
 # Queries that already have a green row in an official CORRECTNESS_r{N}.json
 # (rounds 1–2).  The driver records a bounded prefix (50 entries) of
 # ``queries()``, so never-officially-checked oracle queries must sort ahead
 # of these to get on the record; the set is a frozen historical fact, safe
 # to hardcode.  Later rounds' files are merged in dynamically by
-# ``_officially_checked`` so the rotation keeps working without edits.
+# ``_correctness_record`` so the rotation keeps working without edits.
 _OFFICIALLY_CHECKED: frozenset[str] = frozenset({
     "anti_join_dormant_customers", "asof_click_to_view",
     "cheapest_part_per_brand", "cohort_retention", "conditional_agg_ratio",
@@ -67,13 +94,19 @@ _OFFICIALLY_CHECKED: frozenset[str] = frozenset({
 })
 
 
-def _certification_rounds() -> dict[str, int]:
-    """name → round of the most recent PASSING official check (rows,
-    schema, and hash all matched, no error) in a ``CORRECTNESS_r*.json``
-    at the repo root.  The hardcoded r01/r02 baseline names start at
-    round 2 unless a later file re-checks them.  Names whose LATEST
-    appearance failed are absent — they re-front the driver's bounded
-    window until re-certified."""
+def _correctness_record() -> tuple[dict[str, int], frozenset[str]]:
+    """One pass over the official ``CORRECTNESS_r*.json`` files at the
+    repo root, returning ``(certification rounds, recorded names)``.
+
+    - certification rounds: name → round of the most recent PASSING
+      check (rows, schema, and hash all matched, no error).  The
+      hardcoded r01/r02 baseline names start at round 2 unless a later
+      file re-checks them.  Names whose LATEST appearance failed are
+      absent — they re-front the driver's bounded window until
+      re-certified.
+    - recorded names: every name that has appeared in ANY file, passing
+      or not.  Rows-only queries get the driver's weaker rows-only
+      check — for them, *appearing at all* is the record."""
     import glob
     import json
     import re
@@ -87,6 +120,7 @@ def _certification_rounds() -> dict[str, int]:
 
     # Latest round wins: walk files in round order, overwrite per-name status.
     latest: dict[str, int | None] = {name: 2 for name in _OFFICIALLY_CHECKED}
+    recorded: set[str] = set(_OFFICIALLY_CHECKED)
     for p in sorted(glob.glob(str(root / "CORRECTNESS_r*.json")), key=round_no):
         try:
             with open(p) as f:
@@ -95,6 +129,7 @@ def _certification_rounds() -> dict[str, int]:
             continue
         if not isinstance(rows, dict):
             continue
+        recorded.update(k for k in rows if isinstance(k, str))
         for name, row in rows.items():
             if not isinstance(row, dict):
                 continue
@@ -105,36 +140,8 @@ def _certification_rounds() -> dict[str, int]:
                 and row.get("err") in (None, "")
             )
             latest[name] = round_no(p) if passed else None
-    return {name: rnd for name, rnd in latest.items() if rnd is not None}
-
-
-def _officially_checked() -> frozenset[str]:
-    """Query names whose latest official check passed (see
-    :func:`_certification_rounds`)."""
-    return frozenset(_certification_rounds())
-
-
-def _recorded_names() -> frozenset[str]:
-    """Every query name that has appeared in ANY official
-    ``CORRECTNESS_r*.json`` row, passing or not.  Rows-only queries get
-    the driver's weaker rows-only check — for them, *appearing at all*
-    is the record; :func:`_certification_rounds` only tracks full hash
-    certifications."""
-    import glob
-    import json
-    from pathlib import Path
-
-    root = Path(__file__).resolve().parent.parent.parent
-    names: set[str] = set(_OFFICIALLY_CHECKED)
-    for p in glob.glob(str(root / "CORRECTNESS_r*.json")):
-        try:
-            with open(p) as f:
-                rows = json.load(f)
-        except (OSError, ValueError):
-            continue
-        if isinstance(rows, dict):
-            names.update(k for k in rows if isinstance(k, str))
-    return frozenset(names)
+    cert = {name: rnd for name, rnd in latest.items() if rnd is not None}
+    return cert, frozenset(recorded)
 
 
 def _order_specs(
@@ -183,8 +190,7 @@ def _collect() -> dict[str, QuerySpec]:
             raise ValueError(f"duplicate query name {spec.name!r}")
         seen.add(spec.name)
     return {
-        spec.name: spec
-        for spec in _order_specs(ordered, _certification_rounds(), _recorded_names())
+        spec.name: spec for spec in _order_specs(ordered, *_correctness_record())
     }
 
 

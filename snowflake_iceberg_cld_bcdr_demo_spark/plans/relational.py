@@ -19,24 +19,15 @@ Scale notes (100 TB posture):
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.numeric import dec, dec_avg, dec_sum, one_minus, one_plus
 from ..sources.testdata import register_views, table
-from .registry import QuerySpec
+from .registry import QuerySpec, spec_decorator
 
 SPECS: list[QuerySpec] = []
-
-
-def _spec(name: str, oracle: str | None, doc: str = "") -> Callable:
-    def wrap(fn: Callable[[SparkSession, str], DataFrame]):
-        SPECS.append(QuerySpec(name=name, build=fn, oracle=oracle, doc=doc or (fn.__doc__ or "")))
-        return fn
-
-    return wrap
+_spec = spec_decorator(SPECS)
 
 
 # --------------------------------------------------------------------------

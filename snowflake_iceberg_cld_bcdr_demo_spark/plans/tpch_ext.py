@@ -20,17 +20,10 @@ from pyspark.sql import functions as F
 
 from ..functions.numeric import dec, dec_avg, dec_sum, one_minus
 from ..sources.testdata import register_views, table
-from .registry import QuerySpec
+from .registry import QuerySpec, spec_decorator
 
 SPECS: list[QuerySpec] = []
-
-
-def _spec(name: str, oracle: str | None, doc: str = ""):
-    def wrap(fn):
-        SPECS.append(QuerySpec(name=name, build=fn, oracle=oracle, doc=doc or (fn.__doc__ or "")))
-        return fn
-
-    return wrap
+_spec = spec_decorator(SPECS)
 
 
 # --------------------------------------------------------------------------

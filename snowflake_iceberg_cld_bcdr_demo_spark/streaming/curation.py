@@ -49,7 +49,7 @@ from pyspark.sql import functions as F
 from ..functions.text import fingerprint
 from ..operators import corpus as corpus_ops
 from ..operators.dedup import _banded_signatures
-from ..sources.lakehouse import LakehouseCatalog
+from ..sources.lakehouse import LakehouseCatalog, Snapshot
 
 STATE_TABLES = ("fingerprints", "signatures", "consumed", "nb_model", "nb_tau")
 
@@ -82,7 +82,7 @@ def load_admission_state(
     catalog: LakehouseCatalog,
     namespace: str,
     prefix: str,
-    frozen_cache: dict[str, DataFrame] | None = None,
+    frozen_cache: dict[str, tuple[Snapshot, DataFrame]] | None = None,
 ) -> dict[str, DataFrame]:
     """Reload the admission index.  ``consumed`` is stored as an
     append-only delta log; it aggregates back to per-source totals here
@@ -93,21 +93,37 @@ def load_admission_state(
     inside a stream run, so re-resolving their snapshots every
     micro-batch is pure per-batch driver overhead; the mutable tables
     (fingerprints/signatures/consumed) are re-resolved every call so
-    batch N+1 sees batch N's appends."""
+    batch N+1 sees batch N's appends.  The cache keeps each frozen
+    table's snapshot next to its DataFrame, and every later call checks
+    it against the table's current snapshot (a manifest read, no Spark
+    job): a frozen table that moved mid-run raises instead of serving
+    stale state."""
     cache = frozen_cache if frozen_cache is not None else {}
-    state = {
-        name: cache[name] if name in cache
-        else catalog.load(namespace, f"{prefix}_{name}")
-        for name in STATE_TABLES
-    }
-    if "emb_index" in cache:
-        state["emb_index"] = cache["emb_index"]
-    elif catalog.table_exists(namespace, f"{prefix}_emb_index"):
-        state["emb_index"] = catalog.load(namespace, f"{prefix}_emb_index")
-    if frozen_cache is not None:
-        for name in FROZEN_STATE_TABLES:
-            if name in state:
-                frozen_cache[name] = state[name]
+    for name, (snap, _) in cache.items():
+        now = catalog.current_snapshot(namespace, f"{prefix}_{name}")
+        if now != snap:
+            raise RuntimeError(
+                f"load_admission_state: frozen table {prefix}_{name} moved "
+                f"from snapshot {snap.snapshot_id} to {now.snapshot_id} "
+                "inside a stream run; restart the stream to rotate it"
+            )
+    names = [*STATE_TABLES]
+    if "emb_index" in cache or catalog.table_exists(
+        namespace, f"{prefix}_emb_index"
+    ):
+        names.append("emb_index")
+    state = {}
+    for name in names:
+        if name in cache:
+            state[name] = cache[name][1]
+        elif frozen_cache is not None and name in FROZEN_STATE_TABLES:
+            # the snapshot is read BEFORE the load, so a rotation that
+            # lands in between fails the next call's check
+            snap = catalog.current_snapshot(namespace, f"{prefix}_{name}")
+            state[name] = catalog.load(namespace, f"{prefix}_{name}")
+            frozen_cache[name] = (snap, state[name])
+        else:
+            state[name] = catalog.load(namespace, f"{prefix}_{name}")
     state["consumed"] = (
         state["consumed"]
         .groupBy("source")
@@ -132,7 +148,7 @@ def _admit_batch(
     boiler_grams: DataFrame | None = None,
     es_windows: DataFrame | None = None,
     writer_id: str | None = None,
-    frozen_cache: dict[str, DataFrame] | None = None,
+    frozen_cache: dict[str, tuple[Snapshot, DataFrame]] | None = None,
 ) -> None:
     """One micro-batch of :func:`stream_curated_admission` (module-level
     so crash-replay is testable without a StreamingQuery).  Gate → stage
@@ -312,7 +328,7 @@ def stream_curated_admission(
     wid = checkpoint_writer_id(checkpoint_dir)
     # frozen model/tau/IVF DataFrames survive across micro-batches (one
     # snapshot resolution per stream run, not per batch)
-    frozen: dict[str, DataFrame] = {}
+    frozen: dict[str, tuple[Snapshot, DataFrame]] = {}
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         _admit_batch(

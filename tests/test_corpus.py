@@ -1583,6 +1583,16 @@ def test_admission_state_path_is_bit_identical(spark, tmp_path):
     )
     assert via_state == direct
 
+    # existing_docs plus a PARTIAL state: the given tables win and the
+    # rest are recomputed from the corpus
+    partial = sorted(
+        corpus.curated_incremental_admit(
+            batch, existing, tgt, 100_000, shares,
+            state={k: state[k] for k in ("nb_tau", "consumed")}, **kw
+        ).collect()
+    )
+    assert partial == direct
+
     # round-trip every table through parquet (map-typed model included),
     # then admit WITHOUT the corpus at all
     reloaded = {}

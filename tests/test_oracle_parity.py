@@ -51,8 +51,7 @@ def test_registry_order_tiers():
 
     names = list(e.queries())
     oracles = set(e.oracle_sql())
-    cert = registry._certification_rounds()
-    recorded = registry._recorded_names()
+    cert, recorded = registry._correctness_record()
 
     def tier(n: str) -> int:
         if n in oracles:
@@ -77,7 +76,7 @@ def test_never_recorded_rows_only_land_in_driver_window():
 
     names = list(e.queries())
     oracles = set(e.oracle_sql())
-    recorded = registry._recorded_names()
+    _, recorded = registry._correctness_record()
     never_recorded_rows_only = [
         n for n in names if n not in oracles and n not in recorded
     ]
@@ -116,7 +115,8 @@ def test_failed_official_rows_refront_rotation(tmp_path, monkeypatch):
         return real_glob(str(tmp_path / "CORRECTNESS_r*.json"))
 
     monkeypatch.setattr(_glob, "glob", fake_glob)
-    checked = registry._officially_checked()
+    rounds, recorded = registry._correctness_record()
+    checked = set(rounds)
     assert "a" in checked            # passed, never contradicted
     assert "b" in checked            # failed r02 but re-certified in r10
     assert "c" not in checked        # latest row crashed -> recheck
@@ -125,8 +125,9 @@ def test_failed_official_rows_refront_rotation(tmp_path, monkeypatch):
     assert "q1_pricing_summary" in checked
     # least-recently-certified ordering data: 'b' carries its r10 round,
     # 'a' its r01 round
-    rounds = registry._certification_rounds()
     assert rounds["a"] == 1 and rounds["b"] == 10 and rounds["d"] == 2
+    # the same pass records every name that appeared, crashed rows too
+    assert {"a", "b", "c", "d"} <= recorded
 
 
 def test_rotation_covers_whole_certified_surface():

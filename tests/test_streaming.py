@@ -608,6 +608,37 @@ def test_stream_curated_admission_full_gate_set_across_batches(spark, tmp_path):
     assert total[0].consumed == whole
 
 
+def test_frozen_admission_state_rotation_raises(spark, tmp_path):
+    """The frozen cache records each frozen table's snapshot: while the
+    model/tau stay put the cached DataFrames are served (mutable tables
+    may move freely), and a frozen table that moves mid-run — a new
+    adm_nb_tau snapshot, or a whole replacement — fails the next load
+    instead of serving stale state."""
+    from snowflake_iceberg_cld_bcdr_demo_spark.streaming import curation as C
+
+    cat = LakehouseCatalog(spark, str(tmp_path / "wh"))
+    consumed = spark.createDataFrame([("src0", 7)], "source string, consumed long")
+    tau = spark.createDataFrame([("src0", 0.5)], "source string, nb_tau double")
+    for name in C.STATE_TABLES:
+        cat.create_table("db", f"adm_{name}", tau if name == "nb_tau" else consumed)
+
+    cache = {}
+    C.load_admission_state(cat, "db", "adm", frozen_cache=cache)
+    assert set(cache) == {"nb_model", "nb_tau"}
+    cat.append("db", "adm_consumed", consumed)
+    again = C.load_admission_state(cat, "db", "adm", frozen_cache=cache)
+    assert again["nb_tau"] is cache["nb_tau"][1]
+    cat.append("db", "adm_nb_tau", tau)
+    with pytest.raises(RuntimeError, match="adm_nb_tau moved"):
+        C.load_admission_state(cat, "db", "adm", frozen_cache=cache)
+
+    cache = {}
+    C.load_admission_state(cat, "db", "adm", frozen_cache=cache)
+    cat.create_table("db", "adm_nb_model", consumed, mode="overwrite")
+    with pytest.raises(RuntimeError, match="adm_nb_model moved"):
+        C.load_admission_state(cat, "db", "adm", frozen_cache=cache)
+
+
 def test_compact_consumed_log_preserves_totals(spark, tmp_path):
     """The consumed delta log compacts to one row per source with
     identical aggregated totals (and survives further appends)."""
