@@ -65,6 +65,10 @@ def build_session(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        # PySpark 4 otherwise wraps every Column/functions call in a
+        # Python call-site capture (~5 py4j round trips per call); errors
+        # still raise, without the Python call-site block
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if warehouse:
         b = b.config("spark.sql.warehouse.dir", warehouse)

@@ -53,7 +53,7 @@ import time
 import uuid
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
@@ -869,40 +869,47 @@ class LakehouseCatalog:
 
     # -- per-dir column bounds (Iceberg manifest file stats analog) -------
     @staticmethod
-    def _stats_exprs(df: DataFrame) -> tuple[list, dict[str, str]]:
-        """(observe-metric exprs, col→kind) for every stats-worthy column.
+    def _stats_exprs(df: DataFrame) -> tuple[Column, dict[str, str]]:
+        """(one observe-metric struct, col→kind) for every stats-worthy
+        column.  The struct is ``(count(1), lo, hi, nulls, lo, hi, nulls,
+        …)`` in ``kinds`` order, written as ONE SQL expression: the
+        driver cost of building it is a single call whatever the width.
         Bounds ride the write job's Observation — zero extra scans.
         Temporal types are normalized to epoch integers so the manifest
         stays JSON-native and comparisons are total-ordered."""
-        exprs, kinds = [], {}
+        fields, kinds = ["count(1)"], {}
         for name, dtype in df.dtypes:
-            c = F.col(name)
-            if dtype.startswith(_STATS_NUMERIC):
-                kind = "num"
-                lo, hi = F.min(c), F.max(c)
-                if dtype.startswith("decimal"):
-                    lo, hi = lo.cast("double"), hi.cast("double")
+            c = "`" + name.replace("`", "``") + "`"
+            # kind, and the SQL that maps the min/max aggregate ``{}`` to
+            # the manifest's bound domain
+            if dtype.startswith("decimal"):
+                kind, bound = "num", "CAST({} AS DOUBLE)"
+            elif dtype.startswith(_STATS_NUMERIC):
+                kind, bound = "num", "{}"
             elif dtype == "string":
-                kind, lo, hi = "str", F.min(c), F.max(c)
-            elif dtype == "timestamp" or dtype == "timestamp_ntz":
+                kind, bound = "str", "{}"
+            elif dtype == "timestamp":
+                kind, bound = "num", "unix_micros({})"
+            elif dtype == "timestamp_ntz":
+                # wall-clock micros, the domain naive filter literals
+                # normalize to (unix_micros takes no TIMESTAMP_NTZ)
                 kind = "num"
-                lo, hi = F.unix_micros(F.min(c)), F.unix_micros(F.max(c))
+                bound = "timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', {})"
             elif dtype == "date":
-                kind = "num"
-                lo, hi = F.unix_date(F.min(c)), F.unix_date(F.max(c))
+                kind, bound = "num", "unix_date({})"
             else:
                 continue  # arrays/maps/structs/binary/boolean: no bounds
             kinds[name] = kind
-            exprs += [
-                lo.alias(f"lo__{name}"),
-                hi.alias(f"hi__{name}"),
-                # null count makes bounds usable for PROOFS OF FULL MATCH
-                # (metadata-only aggregates): [lo, hi] describes only the
-                # non-null rows, so "every row satisfies col >= v" needs
-                # nulls == 0 on top of lo >= v
-                F.sum(c.isNull().cast("long")).alias(f"nulls__{name}"),
+            # null count makes bounds usable for PROOFS OF FULL MATCH
+            # (metadata-only aggregates): [lo, hi] describes only the
+            # non-null rows, so "every row satisfies col >= v" needs
+            # nulls == 0 on top of lo >= v
+            fields += [
+                bound.format(f"min({c})"),
+                bound.format(f"max({c})"),
+                f"sum(CAST(({c} IS NULL) AS BIGINT))",
             ]
-        return exprs, kinds
+        return F.expr(f"struct({', '.join(fields)})"), kinds
 
     @staticmethod
     def _stats_from_metrics(metrics: dict, kinds: dict[str, str], dtypes: dict[str, str]) -> dict:
@@ -1063,14 +1070,15 @@ class LakehouseCatalog:
         (hidden) partition layout; returns (dir name, row count, the dir's
         :data:`DIR_FAMILIES` entries).  The row count and stats ride the
         write job itself via ``df.observe`` — no second scan; the file
-        schema is ``df.schema``, known without a job.  A zero-row write
-        leaves a dir with no parquet file: see :meth:`_keep_empty`."""
+        schema is ``df.schema``, known without a job.  A zero-row
+        partitioned write leaves a dir with no parquet file: see
+        :meth:`_keep_empty`."""
         sid_guess = len(manifest["snapshots"]) + 1
         data_dir = self._claim_data_dir(namespace, table, sid_guess)
         out = os.path.join(self._table_path(namespace, table), data_dir)
         obs = Observation()
-        stat_exprs, stat_kinds = self._stats_exprs(df)
-        observed = df.observe(obs, F.count(F.lit(1)).alias("rows"), *stat_exprs)
+        stats, stat_kinds = self._stats_exprs(df)
+        observed = df.observe(obs, stats.alias("stats"))
         # Hidden partitioning: derive transform partition columns (months/
         # days/bucket/truncate specs) on the fly; identity specs partition
         # on the source column directly.  Derived `_p_…` columns live only
@@ -1096,12 +1104,20 @@ class LakehouseCatalog:
             # not W×P small files — THE small-file guard at 100 TB
             # (one extra hash shuffle per commit, bought deliberately).
             observed = observed.repartition(*[F.col(c) for c in pcols])
-        writer = observed.write.mode("overwrite")
+        # "append" into the claimed dir: "overwrite" would delete and
+        # re-create it, and a concurrent claim in that gap would get the
+        # same name (two rewrites in one dir)
+        writer = observed.write.mode("append")
         if pcols:
             writer = writer.partitionBy(*pcols)
         writer.parquet(out)
-        metrics = obs.get
-        added = int(metrics["rows"])
+        values = iter(obs.get["stats"])
+        added = int(next(values))
+        metrics = {
+            f"{key}__{name}": next(values)
+            for name in stat_kinds
+            for key in ("lo", "hi", "nulls")
+        }
         return data_dir, added, {
             "dir_columns": list(df.columns),
             "dir_schemas": _file_schema(df.schema, pcols),
@@ -1117,11 +1133,14 @@ class LakehouseCatalog:
         """Make a zero-row data dir readable.  A zero-row partitioned
         write materializes no partition dirs (and hence no schema-bearing
         parquet file); an empty create/replace keeps one explicit empty,
-        unpartitioned file so the table schema survives."""
+        unpartitioned file so the table schema survives.  A zero-row
+        unpartitioned write already left that file (Spark's first task
+        always writes one)."""
         out = os.path.join(self._table_path(namespace, table), data_dir)
-        self.spark.createDataFrame([], schema).repartition(1).write.mode(
-            "overwrite"
-        ).parquet(out)
+        if not _glob.glob(os.path.join(out, "*.parquet")):
+            self.spark.createDataFrame([], schema).repartition(1).write.mode(
+                "append"
+            ).parquet(out)
         entries["dir_schemas"] = _file_schema(schema)
 
     def _write_delete_dir(

@@ -94,3 +94,16 @@ def test_cluster_conf_sizing_arithmetic():
     # a tiny cluster/dataset still floors at 2x cores
     small = cluster_conf(executors=2, cores_per_executor=4, dataset_tb=0.001)
     assert int(small["spark.sql.shuffle.partitions"]) == 16
+
+
+def test_session_skips_python_call_site_capture(spark):
+    """The session turns off PySpark's per-call Python call-site capture
+    (several py4j round trips per Column call); analysis errors still
+    raise."""
+    from pyspark.errors import AnalysisException
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert is_debugging_enabled() is False
+    with pytest.raises(AnalysisException):
+        spark.range(1).select(F.col("no_such_column")).collect()

@@ -936,3 +936,108 @@ def test_incremental_read_uses_recorded_schemas(spark, wide):
     want = wide.load("db", "hidden").filter(F.col("id") >= 150)
     assert delta.columns == want.columns
     assert sorted(delta.collect(), key=repr) == sorted(want.collect(), key=repr)
+
+
+def test_claimed_data_dir_is_written_in_place(spark, cat):
+    """A claimed data dir is never deleted and re-created by the write
+    into it: a concurrent claim in that gap would get the same name, and
+    two rewrites would land in one dir.  A hidden marker dropped into
+    each claimed dir must survive every commit path that fills it."""
+    marker = "._claimed"
+    claimed = []
+    orig = cat._claim_data_dir
+
+    def spy(namespace, table, sid):
+        name = orig(namespace, table, sid)
+        open(os.path.join(cat._table_path(namespace, table), name, marker), "w").close()
+        claimed.append((table, name))
+        return name
+
+    cat._claim_data_dir = spy
+    try:
+        for i in range(3):  # create, append, append: three dirs
+            (cat.append if i else cat.create_table)("db", "t", _df(spark, 20, 20 * i))
+        cat.purge_rows("db", "t", [("bucket", "=", "1")])  # parallel rewrites
+        empty = _df(spark, 0)
+        cat.create_table("db", "e", empty)  # zero-row dir kept readable
+        cat.create_table("db", "ep", empty, partition_by=["date_key"])
+    finally:
+        cat._claim_data_dir = orig
+
+    assert cat.load("db", "t").count() == 40
+    assert cat.load("db", "e").count() == cat.load("db", "ep").count() == 0
+    live = {
+        (t, d) for t in ("t", "e", "ep") for d in cat.current_snapshot("db", t).data_dirs
+    }
+    assert len(live) == 5 and live <= set(claimed)
+    for t, d in live:
+        assert os.path.exists(os.path.join(cat._table_path("db", t), d, marker)), d
+
+
+def test_any_parquet_column_name_round_trips(spark, cat):
+    """Column names are quoted in the commit statistics, so a dot or a
+    backtick in a name is just a character."""
+    df = spark.range(3).select(
+        F.col("id"), (F.col("id") * 10).alias("a.b"), F.col("id").cast("string").alias("a`b")
+    )
+    cat.create_table("db", "names", df)
+    cat.append("db", "names", df.select("id", "`a.b`", F.lit("x").alias("a`b")))
+    got = cat.load("db", "names")
+    assert got.columns == ["id", "a.b", "a`b"]
+    assert sorted(tuple(r) for r in got.collect()) == sorted(
+        [(i, i * 10, str(i)) for i in range(3)] + [(i, i * 10, "x") for i in range(3)]
+    )
+    first, second = cat._read_manifest("db", "names")["dir_stats"].values()
+    assert first["a.b"] == [0, 20, 0] and first["a`b"] == ["0", "2", 0]
+    assert second["a.b"] == [0, 20, 0] and second["a`b"] == ["x", "x", 0]
+
+
+def test_dir_stats_contract(spark, cat):
+    """The manifest's ``dir_stats`` per column kind, against values worked
+    out by hand; and the statistics are one observed Column however wide
+    the frame is."""
+    import datetime as dt
+    import decimal
+    import math
+
+    from pyspark.sql import Column
+
+    utc = dt.timezone.utc
+    df = spark.createDataFrame(
+        [
+            (decimal.Decimal("12.34"), dt.date(2024, 3, 1),
+             dt.datetime(2024, 3, 1, 12, 0, 0, 500000, tzinfo=utc),
+             dt.datetime(2024, 3, 1, 12, 0, 0, 500000), "a" * 70, None, True, [1]),
+            (decimal.Decimal("99.99"), dt.date(2024, 3, 3),
+             dt.datetime(2024, 3, 2, tzinfo=utc), dt.datetime(2024, 3, 2),
+             "b" * 70, None, False, []),
+            (None, None, None, None, None, None, None, None),
+        ],
+        "dec decimal(10,2), day date, ts timestamp, ntz timestamp_ntz, s string, "
+        "nul int, flag boolean, xs array<int>",
+    )
+    cat.create_table("db", "kinds", df)
+    man = cat._read_manifest("db", "kinds")
+    ((d, stats),) = man["dir_stats"].items()
+    assert man["dir_rows"][d] == 3
+    # 2024-03-01 is day 19,783 since the epoch; 12:00:00.5 that day is
+    # 1,709,294,400.5 s, and 2024-03-02 00:00 is 1,709,337,600 s
+    assert stats == {
+        # decimals pass through double, widened one ULP outward
+        "dec": [math.nextafter(12.34, -math.inf), math.nextafter(99.99, math.inf), 1],
+        "day": [19783, 19785, 1],
+        "ts": [1709294400500000, 1709337600000000, 1],
+        # NTZ bounds are wall-clock micros, as naive filter literals read
+        "ntz": [1709294400500000, 1709337600000000, 1],
+        # strings over 64 chars: prefix below, incremented prefix above
+        "s": ["a" * 64, "b" * 63 + "c", 1],
+        # all-null, boolean and array columns carry no bounds
+    }
+    assert cat.prune_preview("db", "kinds", [("ntz", ">", dt.datetime(2024, 3, 2))])[
+        "kept"
+    ] == []
+
+    for width in (1, 40):
+        wide = spark.range(1).select(*[F.col("id").alias(f"c{i}") for i in range(width)])
+        stats_col, kinds = LakehouseCatalog._stats_exprs(wide)
+        assert isinstance(stats_col, Column) and len(kinds) == width
