@@ -76,10 +76,13 @@ _STATS_NUMERIC = ("tinyint", "smallint", "int", "bigint", "float", "double", "de
 #: ``delete_dir_schemas`` hold each dir's parquet FILE schema
 #: (``StructType.json()``): reads pass it to Spark instead of inferring
 #: it, which would cost one Spark job per dir (Iceberg readers likewise
-#: take the schema from table metadata).
+#: take the schema from table metadata).  ``dir_layout`` holds a data
+#: dir's hive partition fields (its spec, as an Iceberg data file
+#: carries its spec id): reads scan all dirs of one layout together.
 DIR_FAMILIES = (
     "dir_columns",
     "dir_schemas",
+    "dir_layout",
     "dir_stats",
     "dir_rows",
     "dir_blooms",
@@ -1121,6 +1124,7 @@ class LakehouseCatalog:
         return data_dir, added, {
             "dir_columns": list(df.columns),
             "dir_schemas": _file_schema(df.schema, pcols),
+            "dir_layout": pcols,
             "dir_stats": (
                 self._stats_from_metrics(metrics, stat_kinds, dtypes) if added else {}
             ),
@@ -1142,6 +1146,7 @@ class LakehouseCatalog:
                 "append"
             ).parquet(out)
         entries["dir_schemas"] = _file_schema(schema)
+        entries["dir_layout"] = []
 
     def _write_delete_dir(
         self, namespace: str, table: str, sid: int, keys: DataFrame
@@ -2444,6 +2449,22 @@ class LakehouseCatalog:
             recorded = manifest[family] = {**recorded, **found}
         return {d: _schema_of(recorded[d]) for d in dirs}
 
+    @staticmethod
+    def _dir_layout(tpath: str, d: str, manifest: dict) -> tuple[str, ...]:
+        """The hive partition fields of data dir ``d``, outermost first
+        (``()``: its files sit at the dir root).  Recorded at commit
+        (``dir_layout``).  A dir committed before that is listed: the
+        spec history cannot say which spec wrote it, because a purge
+        rewrites an old-era dir under the current spec in place, and a
+        commit can race :meth:`alter_partition_spec`."""
+        layout = manifest.get("dir_layout", {}).get(d)
+        if layout is not None:
+            return tuple(layout)
+        root = os.path.join(tpath, d)
+        leaf = min(_glob.glob(os.path.join(root, "**", "*.parquet"), recursive=True))
+        rel = os.path.relpath(os.path.dirname(leaf), root)
+        return tuple(p.split("=", 1)[0] for p in rel.split(os.sep) if p != ".")
+
     def _read_dir_paths(
         self,
         namespace: str,
@@ -2453,12 +2474,17 @@ class LakehouseCatalog:
         file_lists: dict[str, list[str]] | None = None,
     ) -> DataFrame:
         """Read an explicit list of data dirs with read-time schema merge
-        (shared by :meth:`load` and the row-level rewrite ops).  Each dir
-        is read with its recorded file schema, so planning launches no
-        Spark job; hive partition columns are still discovered from the
-        paths, on the driver.  ``file_lists`` narrows a dir to an
-        explicit surviving-file subset (file-level data skipping after a
-        clustered rewrite)."""
+        (shared by :meth:`load` and the row-level rewrite ops): ONE
+        parquet scan per partition layout over all its dirs' files, so
+        the plan and its task count do not grow with history (an Iceberg
+        scan is planned from all of a snapshot's manifests at once).
+        Schemas and layouts come from the manifest, so planning launches
+        no Spark job; hive partition columns are still discovered from
+        the ``k=v`` segments below each dir.  ``file_lists`` narrows a
+        dir to an explicit surviving-file subset (file-level data
+        skipping after a clustered rewrite)."""
+        from functools import reduce
+
         tpath = self._table_path(namespace, table)
 
         def paths_for(d: str) -> list[str]:
@@ -2468,44 +2494,38 @@ class LakehouseCatalog:
             return [p]
 
         schemas = self._recorded_schemas(namespace, table, manifest, read_dirs)
-        # partition-spec evolution: dirs written under a RETIRED non-empty
-        # spec still have hive layout even when the current spec is empty
-        partitioned_any = bool(manifest["partition_by"]) or any(
-            h.get("spec") for h in manifest.get("partition_specs", [])
+        # a zero-row dir is one empty file at its root, which a scan of
+        # partitioned dirs would silently skip: leave it out, keeping the
+        # columns only it has (NULL in every row; its schema also holds
+        # the identity partition columns, which the paths give)
+        rows = manifest.get("dir_rows", {})
+        live = [d for d in read_dirs if rows.get(d, 1)] or read_dirs
+        groups: dict[tuple, list[str]] = {}
+        for d in live:
+            groups.setdefault(self._dir_layout(tpath, d, manifest), []).append(d)
+        seen = {f for layout in groups for f in layout}
+        seen |= {f.name for d in live for f in schemas[d]}
+        extra = list(
+            {f.name: f for d in read_dirs for f in schemas[d] if f.name not in seen}.values()
         )
-        merged = (
-            None
-            if partitioned_any and (len(read_dirs) > 1 or file_lists)
-            else _merged_schema([schemas[d] for d in read_dirs])
-        )
-        if merged is None:
-            # Hive-partitioned dirs can't share one basePath across
-            # multiple snapshot roots (Spark's partition discovery rejects
-            # the non-partition data-dir level: CONFLICTING_DIRECTORY_
-            # STRUCTURES).  Read each snapshot dir rooted at itself and
-            # union; filter/column pushdown applies per branch and
-            # partition pruning still reaches each scan.  Frames differ
-            # under schema or spec evolution (derived `_p_…` columns
-            # exist only in their own era's dirs): missing columns read
-            # as NULL.
-            from functools import reduce
-
-            parts = [
-                self.spark.read.schema(schemas[d])
-                .option("basePath", os.path.join(tpath, d))
-                .parquet(*paths_for(d))
-                for d in read_dirs
-            ]
-            return reduce(
-                lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
-            )
-        # One multi-path read (not a unionAll chain): Spark builds a
-        # single file index, so pruning/pushdown span all snapshots; the
-        # merged schema reads columns a dir lacks as NULL.
-        paths = [p for d in read_dirs for p in paths_for(d)]
-        return (
-            self.spark.read.schema(merged).option("basePath", tpath).parquet(*paths)
-        )
+        # dirs that give one column different types are read one by one;
+        # ``unionByName`` widens them, and joins the layouts (a partition
+        # field one layout lacks reads as NULL in the others)
+        parts = []
+        for layout, dirs in groups.items():
+            merged = _merged_schema([schemas[d] for d in dirs])
+            for ds, schema in (
+                [(dirs, merged)] if merged is not None else [([d], schemas[d]) for d in dirs]
+            ):
+                reader = self.spark.read.schema(StructType([*schema, *extra]))
+                reader = reader.option("basePath", tpath)
+                if layout:
+                    # skips only the check that all paths share one
+                    # partition root: the data-dir level above the `k=v`
+                    # segments is none
+                    reader = reader.option("ignoreInvalidPartitionPaths", "true")
+                parts.append(reader.parquet(*[p for d in ds for p in paths_for(d)]))
+        return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
 
     def _read_dirs_clean(
         self, namespace: str, table: str, read_dirs: list[str], manifest: dict

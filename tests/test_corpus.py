@@ -1808,6 +1808,40 @@ def test_admission_state_nonstandard_nb_buckets(spark):
     assert via_state == direct
 
 
+def test_incremental_admit_matches_oracle_at_64_buckets(spark):
+    """The admission arithmetic at a non-default NB codebook, checked
+    against an independent replay: ``curated_incremental_admit_q`` with
+    a 64-bucket NB model and operating points equals its DuckDB oracle
+    with the bucket count and the add-alpha smoothing (alpha * buckets)
+    rewritten for 64 buckets, and the 256-bucket oracle tells them
+    apart."""
+    from snowflake_iceberg_cld_bcdr_demo_spark.plans import QUERY_SPECS, pipeline
+
+    from .oracle_compare import compare, duck_connection
+
+    oracle = QUERY_SPECS["curated_incremental_admit"].oracle
+    assert oracle.count("% 256") == 2 and oracle.count("128.0") == 4
+    docs = table(spark, SF_SMALL, "documents")
+    # the query's own staged state (shared with its oracle-parity test),
+    # with the two NB tables rebuilt at 64 buckets
+    staged = pipeline._admit_state_staged(spark, SF_SMALL, SF_SMALL.strip("/").replace("/", "-"))
+    nb64 = corpus.admission_state(
+        docs.filter(F.col("doc_id") % 3 != 0), F.col("source").isin("src0", "src1"), buckets=64
+    )
+    state = {k: v for k, v in staged.items() if k not in ("boiler_grams", "es_windows")}
+    got = corpus.curated_incremental_admit(
+        docs.filter(F.col("doc_id") % 3 == 0), None, None, 25_000, pipeline._MIX_SHARES,
+        blocklist=["spark", "shuffle", "broadcast"],
+        boiler_grams=staged["boiler_grams"],
+        es_windows=staged["es_windows"],
+        state={**state, "nb_model": nb64["nb_model"], "nb_tau": nb64["nb_tau"]},
+    ).localCheckpoint()
+    duck = duck_connection(SF_SMALL)
+    ok, msg = compare(got, duck, oracle.replace("% 256", "% 64").replace("128.0", "32.0"))
+    assert ok, msg
+    assert not compare(got, duck, oracle)[0]
+
+
 def test_admission_state_duplicate_fingerprints_no_row_multiplication(spark):
     """A non-distinct (user-maintained) fingerprints table must not
     multiply batch rows through the exact-gate left join: one trail row

@@ -814,7 +814,11 @@ def wide(spark, tmp_path_factory):
     - ``unpart``: 40 unpartitioned dirs, every other one with a column more;
     - ``hidden``: transform partitions (months, bucket);
     - ``empty``: an empty partitioned create, then appends;
-    - ``mor``: outstanding merge-on-read deletes (delete and upsert)."""
+    - ``mor``: outstanding merge-on-read deletes (delete and upsert);
+    - ``unpart_spec``: ``unpart`` after a spec change to ``date_key``
+      and one append (root files beside partitioned dirs);
+    - ``clustered``: ``part`` after a clustered ``compact`` (per-file
+      stats) and one append."""
     cat = LakehouseCatalog(spark, str(tmp_path_factory.mktemp("wide") / "wh"))
     for i in range(WIDE_DIRS):
         if i == 0:
@@ -842,9 +846,43 @@ def wide(spark, tmp_path_factory):
     cat.upsert_mor(
         "db", "mor", _day(spark, 1).withColumn("v", F.lit(9)), equality_cols=["id"]
     )
-    for table in ("part", "ddl", "spec", "unpart"):
+    _copy_table(cat, "unpart", "unpart_spec")
+    cat.alter_partition_spec("db", "unpart_spec", ["date_key"])
+    cat.append("db", "unpart_spec", _day(spark, WIDE_DIRS))
+    _copy_table(cat, "part", "clustered")
+    cat.compact("db", "clustered", cluster_by=["id"])
+    cat.append("db", "clustered", _day(spark, WIDE_DIRS))
+    for table in ("part", "ddl", "spec", "unpart", "unpart_spec"):
         assert len(cat.current_snapshot("db", table).data_dirs) >= WIDE_DIRS
     return cat
+
+
+@pytest.fixture(scope="module")
+def per_dir(spark, wide):
+    """Independent reference reads, one per table: every data dir of the
+    head snapshot read alone, rooted at itself, then ``unionByName``.
+    Each dir's file columns come from one of its parquet footers (typed
+    as ``_day`` writes them), not from the manifest; partition columns
+    are discovered from the dir's own paths."""
+    import glob
+    from functools import cache, reduce
+
+    import pyarrow.parquet as pq
+
+    types = {"id": "bigint", "v": "int", "date_key": "string", "extra": "bigint"}
+
+    def one(path):
+        leaf = min(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
+        schema = ", ".join(f"{c} {types[c]}" for c in pq.read_schema(leaf).names)
+        return spark.read.schema(schema).option("basePath", path).parquet(path)
+
+    @cache
+    def read(table):
+        tpath = wide._table_path("db", table)
+        frames = [one(os.path.join(tpath, d)) for d in wide.current_snapshot("db", table).data_dirs]
+        return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)
+
+    return read
 
 
 @pytest.mark.parametrize(
@@ -920,6 +958,94 @@ def test_fanout_staging_read_prunes_to_one_dir(spark, cat):
     for b in range(3):
         kept = cat.prune_preview("db", "staging", [("batch_id", "=", b)])["kept"]
         assert kept == [dirs[b]]
+
+
+@pytest.mark.parametrize("table", ["part", "ddl"])
+def test_partitioned_load_is_one_scan(spark, wide, per_dir, table):
+    """A 40-dir partitioned table loads as ONE parquet scan (no union of
+    per-dir reads) with no Spark job, and reads what the dirs read one
+    by one."""
+    got, jobs = _jobs(spark, lambda: wide.load("db", table))
+    assert jobs == 0
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan") == 1 and "Union" not in plan
+    want = per_dir("part")
+    if table == "ddl":
+        want = want.withColumnRenamed("v", "w").withColumn("note", F.lit(None).cast("string"))
+    assert got.columns == (["id", "v", "date_key"] if table == "part" else
+                           ["id", "w", "date_key", "note"])
+    want = want.select(*got.columns)
+    assert got.schema == want.schema
+    assert sorted(got.collect(), key=repr) == sorted(want.collect(), key=repr)
+
+
+@pytest.mark.parametrize(
+    "table, filters",
+    [
+        ("unpart_spec", None),  # unpartitioned dirs, then date_key dirs
+        ("spec", None),  # date_key dirs, then bucket dirs
+        ("empty", None),  # a zero-row root file, then date_key dirs
+        ("clustered", [("id", "in", [3, 7, 203])]),  # file lists + a whole dir
+    ],
+)
+def test_one_scan_per_layout_drops_no_row(spark, wide, per_dir, table, filters):
+    """Dirs of different layouts are never in one scan (a scan of
+    partitioned dirs skips files at a dir root): every row the dirs hold
+    read one by one comes back."""
+    got = wide.load("db", table, filters=filters)
+    want = per_dir(table).select(*got.columns)
+    if filters:
+        kept = wide.prune_preview("db", table, filters)
+        assert len(kept["kept"]) == 2 and kept["kept_files"]  # a file subset
+        want = want.filter(F.col("id").isin(3, 7, 203))
+    rows = sorted(got.collect(), key=repr)
+    assert rows == sorted(want.collect(), key=repr) and rows
+
+
+@pytest.mark.parametrize("table", ["part", "hidden", "spec"])
+def test_one_scan_keeps_partition_column_types(spark, wide, per_dir, table):
+    """Partition columns (identity and derived ``_p_…`` fields) get the
+    types the dirs give read one by one."""
+    dirs = list(wide.current_snapshot("db", table).data_dirs)
+    got = wide._read_dir_paths("db", table, dirs, wide._read_manifest("db", table))
+    assert sorted(got.dtypes) == sorted(per_dir(table).dtypes)
+
+
+def test_zero_row_dir_keeps_its_columns(spark, cat):
+    """A zero-row dir stays out of the scan but not out of the schema: a
+    column only the empty create had reads as NULL."""
+    empty = _day(spark, 0).limit(0).withColumn("note", F.lit("x"))
+    cat.create_table("db", "t", empty, partition_by=["date_key"])
+    cat.append("db", "t", _day(spark, 1))
+    got = cat.load("db", "t")
+    assert got.columns == ["id", "v", "date_key", "note"]
+    assert sorted(tuple(r) for r in got.collect()) == [
+        (i, i % 3, "2024-01-02", None) for i in range(5, 10)
+    ]
+
+
+def test_dirs_without_recorded_layout_are_listed(spark, wide, per_dir):
+    """A dir committed before layouts were recorded gets its layout from
+    its own paths: the listing gives what a commit records, and a
+    spec-evolved table read that way still returns every row."""
+    import glob
+    import json
+
+    for table in ("spec", "empty", "hidden"):
+        m = wide._read_manifest("db", table)
+        tpath = wide._table_path("db", table)
+        listed = {d: list(wide._dir_layout(tpath, d, {})) for d in m["dir_layout"]}
+        assert listed == m["dir_layout"]
+    _copy_table(wide, "spec", "legacy_spec")
+    for path in glob.glob(os.path.join(wide._table_path("db", "legacy_spec"), "_manifest*.json")):
+        with open(path) as f:
+            m = json.load(f)
+        m.pop("dir_layout")
+        with open(path, "w") as f:
+            json.dump(m, f)
+    got = wide.load("db", "legacy_spec")
+    want = per_dir("spec").select(*got.columns)
+    assert sorted(got.collect(), key=repr) == sorted(want.collect(), key=repr)
 
 
 def test_incremental_read_uses_recorded_schemas(spark, wide):
